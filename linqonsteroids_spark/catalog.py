@@ -9,9 +9,11 @@ partitioned/bucketed table; nothing here materializes on the driver.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = [
     "region",
@@ -55,15 +57,64 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one catalog table as a DataFrame (lazy parquet scan)."""
+#: catalog file schemas by (path, ``nanosAsLong``); testdata is read-only
+_SCHEMAS: dict[tuple[str, str], StructType] = {}
+
+
+def table_path(sf_dir: str, name: str) -> str:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog has {TABLES}")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_events_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """One catalog table's parquet file schema, inferred (a Spark job)
+    once per process; ``nanosAsLong`` changes how TIMESTAMP(NANOS) reads."""
+    path = table_path(sf_dir, name)
+    key = (path, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    if key not in _SCHEMAS:
+        _SCHEMAS[key] = spark.read.parquet(path).schema
+    return _SCHEMAS[key]
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one catalog table as a DataFrame (lazy parquet scan)."""
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(table_schema(spark, sf_dir, name)).parquet(path)
+    return normalize_events_ts(df) if name == "events" else df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One catalog table as a file stream. The file-stream source wants a
+    directory, so it streams ``sf_dir`` glob-filtered to the table's file."""
+    df = (
+        spark.readStream.schema(table_schema(spark, sf_dir, name))
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+    return normalize_events_ts(df) if name == "events" else df
+
+
+#: schema a package writer stored beside its parquet files (the leading
+#: underscore hides it from parquet listings)
+SCHEMA_SIDECAR = "_schema.json"
+
+
+def save_schema(path: str, schema: StructType) -> None:
+    """Record the schema just written to the parquet directory ``path``."""
+    with open(os.path.join(path, SCHEMA_SIDECAR), "w") as f:
+        json.dump(schema.jsonValue(), f)
+
+
+def saved_schema(path: str) -> StructType:
+    """The schema :func:`save_schema` recorded for ``path``."""
+    with open(os.path.join(path, SCHEMA_SIDECAR)) as f:
+        return StructType.fromJson(json.load(f))
+
+
+def read_saved(spark: SparkSession, path: str) -> DataFrame:
+    """Read a parquet directory with its recorded schema."""
+    return spark.read.schema(saved_schema(path)).parquet(path)
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -114,8 +114,9 @@ def bloom_semi_reduce(
     # the words are inlined into a parsed SQL literal below — a non-int
     # (None/float from a changed bloom_bitmap) would become a parse error
     # or a silently wrong literal at the py4j boundary; fail loudly here
-    # instead (r15 ADVICE)
-    bad = [w for w in words if not isinstance(w, int)]
+    # instead (r15 ADVICE). bool is an int subclass and would render as
+    # True/False, so the check is on the exact type.
+    bad = [w for w in words if type(w) is not int]
     if bad:
         raise TypeError(
             f"bloom_bitmap produced non-int bitmap words: {bad[:3]!r}"

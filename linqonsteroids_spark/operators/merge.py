@@ -39,6 +39,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.catalog import read_saved, save_schema
+
 
 class BucketedMergeTable:
     def __init__(self, spark: SparkSession, path: str, key: str, n_buckets: int = 16):
@@ -83,9 +85,11 @@ class BucketedMergeTable:
         )
         with open(self._meta_path(), "w") as f:
             json.dump({"n_buckets": self.n_buckets, "key": self.key}, f)
+        # reads declare the data schema; mv_bucket comes from the dirs
+        save_schema(self.path, df.schema)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path).drop("mv_bucket")
+        return read_saved(self.spark, self.path).drop("mv_bucket")
 
     def merge(
         self,
@@ -108,7 +112,7 @@ class BucketedMergeTable:
         service, persist the source to durable storage instead.
         """
         self._check_meta()
-        target = self.spark.read.parquet(self.path)
+        target = read_saved(self.spark, self.path)
         tcols = [c for c in target.columns if c != "mv_bucket"]
         overlap = (set(tcols) & set(source.columns)) - {self.key}
         if overlap:
@@ -163,6 +167,7 @@ class BucketedMergeTable:
             .partitionBy("mv_bucket")
             .parquet(self.path)
         )
+        save_schema(self.path, merged.drop("mv_bucket").schema)
         # Dynamic partition overwrite only rewrites partitions PRESENT in
         # the written frame: a touched bucket whose every row was deleted
         # (and that received no update/insert) produces zero output rows,

@@ -76,6 +76,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 _OP = "_op"  # 'U' = upsert (full row), 'D' = delete (key only)
 _VER = "_v"
@@ -287,9 +288,15 @@ class MorTable:
         so the horizon refuses rather than guesses."""
         return int(self._read_meta().get("compacted_through", 0))
 
-    def _write_meta(self, compacted_through: int, fence=None) -> None:
+    def _write_meta(
+        self, compacted_through: int, fence=None, base_schema=None
+    ) -> None:
+        """Advance the horizon; ``compact`` also records the schema of the
+        base it is about to promote, in the same write."""
         m = self._read_meta()
         m["compacted_through"] = compacted_through
+        if base_schema is not None:
+            m["base_schema"] = base_schema.jsonValue()
         # versions at or below the horizon are refused by the horizon
         # rule already; keep the folded list small
         m["folded_versions"] = [
@@ -365,9 +372,7 @@ class MorTable:
                     atomic_replace(self._base, old)
                     atomic_replace(self._staged, self._base)
                     for v in subsumed:
-                        shutil.rmtree(
-                            os.path.join(self._delta_root, f"mor_v={v}")
-                        )
+                        shutil.rmtree(self._version_dir(v))
                     if os.path.isdir(
                         self._delta_root
                     ) and not os.listdir(self._delta_root):
@@ -386,9 +391,7 @@ class MorTable:
             horizon = self._compacted_through()
             for v in self._existing_versions():
                 if v <= horizon:
-                    shutil.rmtree(
-                        os.path.join(self._delta_root, f"mor_v={v}")
-                    )
+                    shutil.rmtree(self._version_dir(v))
             if os.path.isdir(self._delta_root) and not os.listdir(
                 self._delta_root
             ):
@@ -436,11 +439,9 @@ class MorTable:
                 m = self._read_meta()
                 m["bloom_ndv"] = {c: int(n) for c, n in bloom.items()}
                 self._write_meta_dict(m, fence=fence)
-        from pyspark.sql.types import StructType
-
         with self._locked() as fence:
             m = self._read_meta()
-            m["schema"] = StructType(list(df.schema.fields)).jsonValue()
+            m["schema"] = m["base_schema"] = df.schema.jsonValue()
             m["schema_through"] = int(m.get("compacted_through", 0))
             self._write_meta_dict(m, fence=fence)
         if self.digest_manifest:
@@ -449,7 +450,7 @@ class MorTable:
             )
 
             write_digest_manifest(
-                self.spark.read.parquet(self._base),
+                self._read_base(),
                 self.path,
                 [self.key],
                 n_buckets=self.manifest_buckets,
@@ -505,7 +506,7 @@ class MorTable:
 
         out = []
         for v in self._all_claimed_versions():
-            d = os.path.join(self._delta_root, f"mor_v={v}")
+            d = self._version_dir(v)
             if version_visibility(d) == "visible":
                 out.append(v)
         return out
@@ -519,10 +520,7 @@ class MorTable:
         return [
             v
             for v in self._all_claimed_versions()
-            if version_visibility(
-                os.path.join(self._delta_root, f"mor_v={v}")
-            )
-            == "in-flight"
+            if version_visibility(self._version_dir(v)) == "in-flight"
         ]
 
     def _table_schema(self):
@@ -539,35 +537,74 @@ class MorTable:
         its meta stamp, or a pre-r15 table with no cache at all) is
         caught up from its parquet footer — self-healing, and the next
         append's meta stamp persists the catch-up."""
-        fields, _ = self._evolved_fields(self._read_meta())
+        fields, _, _ = self._evolved_fields(self._read_meta())
         return fields
 
-    def _evolved_fields(self, m: dict):
-        """(fields, through): the evolved schema per the meta cache plus
-        footer catch-up for any live version the cache doesn't cover."""
-        from pyspark.sql.types import StructType
-
+    def _evolved_fields(self, m: dict, known: dict | None = None):
+        """(fields, through, added): the evolved schema per the meta cache
+        plus catch-up for any live version the cache doesn't cover, and
+        the version that introduced each column a delta added. ``known``
+        maps a version to the columns it adds when the caller just wrote
+        it; other uncovered versions are caught up from their footers."""
         cached = m.get("schema")
         if cached is not None:
             fields = list(StructType.fromJson(cached).fields)
             through = int(m.get("schema_through", 0))
         else:
-            fields = list(
-                self.spark.read.parquet(self._base).schema.fields
-            )
+            fields = self._footer_fields(self._base)
             through = 0
+        added = dict(m.get("schema_added", {}))
         seen = {f.name for f in fields}
         have = self._existing_versions()
         for v in have:
             if v <= through:
                 continue
-            for f in self.spark.read.parquet(
-                os.path.join(self._delta_root, f"mor_v={v}")
-            ).schema.fields:
+            new = (known or {}).get(v)
+            if new is None:
+                new = self._footer_fields(self._version_dir(v))
+            for f in new:
                 if f.name not in seen and f.name != _OP:
                     fields.append(f)
                     seen.add(f.name)
-        return fields, max([through, *have])
+                    added[f.name] = v
+        return fields, max([through, *have]), added
+
+    def _footer_fields(self, path: str) -> list:
+        """Fields of the parquet files under ``path``: the only schema
+        inference here, for data the meta does not describe (an older
+        table, or a version whose writer died before its meta stamp)."""
+        return list(self.spark.read.parquet(path).schema.fields)
+
+    def _version_dir(self, v: int) -> str:
+        return os.path.join(self._delta_root, f"mor_v={v}")
+
+    def _read_base(self, *paths: str) -> DataFrame:
+        """The base files (all, or the listed subset) read with the schema
+        their writer recorded in the meta (``write_base`` / ``compact``)."""
+        cached = self._read_meta().get("base_schema")
+        schema = StructType.fromJson(cached) if cached else StructType(
+            self._footer_fields(self._base)
+        )
+        return self.spark.read.schema(schema).parquet(*(paths or [self._base]))
+
+    def _read_deltas(self, versions: list[int]) -> DataFrame:
+        """The delta versions listed, tagged ``_v`` = version. Read with the
+        evolved schema as of the newest of them — a column a later
+        version added is absent, as it was in that state — plus ``_op``;
+        ``mor_v`` comes from the directory names."""
+        fields, _, added = self._evolved_fields(self._read_meta())
+        top = max(versions)
+        schema = StructType(
+            [f for f in fields if added.get(f.name, 0) <= top]
+            + [StructField(_OP, StringType())]
+        )
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self._delta_root)
+            .parquet(*[self._version_dir(v) for v in versions])
+            .withColumn(_VER, F.col("mor_v").cast("int"))
+            .drop("mor_v")
+        )
 
     def _next_version(self) -> int:
         """Next candidate version: above every live version, every
@@ -666,8 +703,6 @@ class MorTable:
         self, version, upserts, delete_keys, commit_timestamp, txn=None,
         check_unique=True,
     ) -> int:
-        from pyspark.sql.types import StructType
-
         from linqonsteroids_spark.functions.schema_compat import (
             reader_compatibility,
         )
@@ -697,6 +732,7 @@ class MorTable:
                 F.broadcast(touched), self.key, "left_semi"
             )
         parts: list[DataFrame] = []
+        new_cols = []
         if upserts is not None:
             if self.key not in upserts.columns:
                 raise ValueError(
@@ -819,7 +855,7 @@ class MorTable:
             # with it, visibility metadata) happens at commit-finalize
             txn.enlist(self, committed)
             return committed
-        self._stamp_commit(committed, commit_timestamp)
+        self._stamp_commit(committed, commit_timestamp, new_cols)
         version = committed
         if self.digest_manifest:
             from linqonsteroids_spark.operators.tablediff import (
@@ -907,7 +943,8 @@ class MorTable:
         )
         if os.path.exists(marker):
             os.remove(marker)
-        self._stamp_commit(version, commit_timestamp)
+        # a transactional version may not add columns (append_delta)
+        self._stamp_commit(version, commit_timestamp, [])
 
     def _sweep_txn_markers(self) -> None:
         """Construction-time transactional recovery: finalize committed
@@ -923,7 +960,7 @@ class MorTable:
         )
 
         for v in self._all_claimed_versions():
-            d = os.path.join(self._delta_root, f"mor_v={v}")
+            d = self._version_dir(v)
             if not os.path.exists(os.path.join(d, "_TXN")):
                 continue
             state = version_visibility(d)
@@ -932,7 +969,7 @@ class MorTable:
             elif state == "aborted":
                 shutil.rmtree(d)
 
-    def _stamp_commit(self, version: int, commit_timestamp) -> None:
+    def _stamp_commit(self, version: int, commit_timestamp, new_cols: list) -> None:
         """Record the committed version's wall-clock and fold its
         schema into the meta cache — ONE serialized read-modify-write
         under the table commit lock (concurrent appends interleave
@@ -960,11 +997,10 @@ class MorTable:
             for v in self._existing_versions():  # heal unstamped
                 ts_map.setdefault(str(v), ts)
             m["version_timestamps"] = ts_map
-            fields, through = self._evolved_fields(m)
-            from pyspark.sql.types import StructType
-
+            fields, through, added = self._evolved_fields(m, {version: new_cols})
             m["schema"] = StructType(fields).jsonValue()
             m["schema_through"] = through
+            m["schema_added"] = added
             self._write_meta_dict(m, fence=fence)
 
     # --- named refs (tags) ------------------------------------------------------
@@ -1695,12 +1731,12 @@ class MorTable:
         else:
             self._write_parquet(merged, self._staged, "error")
         horizon = effective
-        self._write_meta(horizon, fence=fence)
+        self._write_meta(horizon, fence=fence, base_schema=merged.schema)
         old = os.path.join(self.path, f"_retired_base.{os.getpid()}")
         atomic_replace(self._base, old)
         atomic_replace(self._staged, self._base)
         for v in folding:  # only the folded versions; newer appends
-            shutil.rmtree(os.path.join(self._delta_root, f"mor_v={v}"))
+            shutil.rmtree(self._version_dir(v))
         if os.path.isdir(self._delta_root) and not os.listdir(
             self._delta_root
         ):
@@ -1844,18 +1880,7 @@ class MorTable:
                 f"{to_version}"
             )
         window_vs = [v for v in have if from_version < v <= to_version]
-        deltas = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self._delta_root)
-            .parquet(
-                *[
-                    os.path.join(self._delta_root, f"mor_v={v}")
-                    for v in window_vs
-                ]
-            )
-            .withColumn(_VER, F.col("mor_v").cast("int"))
-            .drop("mor_v")
-        )
+        deltas = self._read_deltas(window_vs)
         w = Window.partitionBy(self.key).orderBy(F.desc(_VER))
         last = (
             deltas.withColumn("_rn", F.row_number().over(w))
@@ -1872,7 +1897,7 @@ class MorTable:
         # 'update', feeding corrupt retractions downstream).
         pre_state = (
             self._apply_deltas(
-                self.spark.read.parquet(self._base),
+                self._read_base(),
                 [v for v in have if v <= from_version],
                 False,
             )
@@ -1991,29 +2016,17 @@ class MorTable:
                 self._base, self.key, list(keys)
             )
             base_hits = (
-                self.spark.read.parquet(*kept).where(isin)
+                self._read_base(*kept).where(isin)
                 if kept
-                else self.spark.read.parquet(self._base).limit(0)
+                else self._read_base().limit(0)
             )
         else:
-            base_hits = self.spark.read.parquet(self._base).where(isin)
+            base_hits = self._read_base().where(isin)
         have = self._existing_versions()
         if not have:
             return base_hits
         cols = base_hits.columns
-        deltas = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self._delta_root)
-            .parquet(
-                *[
-                    os.path.join(self._delta_root, f"mor_v={v}")
-                    for v in have
-                ]
-            )
-            .withColumn(_VER, F.col("mor_v").cast("int"))
-            .drop("mor_v")
-            .where(isin)
-        )
+        deltas = self._read_deltas(have).where(isin)
         cols = cols + [
             c
             for c in deltas.columns
@@ -2175,18 +2188,7 @@ class MorTable:
             "folded": folded_now[:-1],
         }
         self._write_meta_dict(m, fence=fence)
-        deltas = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self._delta_root)
-            .parquet(
-                *[
-                    os.path.join(self._delta_root, f"mor_v={v}")
-                    for v in folded_now
-                ]
-            )
-            .withColumn(_VER, F.col("mor_v").cast("int"))
-            .drop("mor_v")
-        )
+        deltas = self._read_deltas(folded_now)
         w = Window.partitionBy(self.key).orderBy(F.desc(_VER))
         net = (
             deltas.withColumn("_rn", F.row_number().over(w))
@@ -2215,7 +2217,7 @@ class MorTable:
         m.pop("log_fold_pending", None)
         self._write_meta_dict(m, fence=fence)
         for v in folded:
-            d = os.path.join(self._delta_root, f"mor_v={v}")
+            d = self._version_dir(v)
             if os.path.isdir(d):
                 shutil.rmtree(d)
 
@@ -2249,9 +2251,7 @@ class MorTable:
             folded = self._folded_versions()
             for v in self._existing_versions():
                 if v in folded:
-                    shutil.rmtree(
-                        os.path.join(self._delta_root, f"mor_v={v}")
-                    )
+                    shutil.rmtree(self._version_dir(v))
             for d in glob.glob(
                 os.path.join(self.path, "_log_compact_staged.v*")
             ):
@@ -2328,7 +2328,7 @@ class MorTable:
         (a tag sitting exactly ON the compaction horizon reads the
         base, which IS its state; tags cannot sit below it).
         """
-        base = self.spark.read.parquet(self._base)
+        base = self._read_base()
         have = self._existing_versions()
         horizon = self._compacted_through()
         if tag is not None:
@@ -2412,20 +2412,9 @@ class MorTable:
                 )
             return base
         cols = base.columns
-        deltas = (
-            self.spark.read.option("mergeSchema", "true")
-            .option("basePath", self._delta_root)
-            .parquet(
-                *[
-                    os.path.join(self._delta_root, f"mor_v={v}")
-                    for v in have
-                ]
-            )
-            .withColumn(_VER, F.col("mor_v").cast("int"))
-            .drop("mor_v")
-        )
-        # evolved schema: base columns first, then additions in the
-        # deltas' merged order — absent in base rows, null-filled below
+        deltas = self._read_deltas(have)
+        # evolved schema: base columns first, then additions in the order
+        # versions introduced them — absent in base rows, null-filled below
         cols = cols + [
             c for c in deltas.columns if c not in cols and c not in (_OP, _VER)
         ]

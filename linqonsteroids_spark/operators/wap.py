@@ -34,6 +34,8 @@ import uuid
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.catalog import read_saved, save_schema
+
 
 class AuditFailure(RuntimeError):
     def __init__(self, report: list[dict]):
@@ -66,9 +68,9 @@ class WapTable:
     def stage(self, df: DataFrame) -> str:
         """Materialize a candidate snapshot; invisible until published."""
         staging_id = uuid.uuid4().hex[:16]
-        df.write.mode("error").parquet(
-            os.path.join(self._staged_root, staging_id)
-        )
+        staged = os.path.join(self._staged_root, staging_id)
+        df.write.mode("error").parquet(staged)
+        save_schema(staged, df.schema)
         return staging_id
 
     def stage_audited(
@@ -92,9 +94,9 @@ class WapTable:
             F.sum(F.when(cond, 0).otherwise(1)).cast("bigint").alias(name)
             for name, cond in checks.items()
         ]
-        df.observe(obs, *aggs).write.mode("error").parquet(
-            os.path.join(self._staged_root, staging_id)
-        )
+        staged = os.path.join(self._staged_root, staging_id)
+        df.observe(obs, *aggs).write.mode("error").parquet(staged)
+        save_schema(staged, df.schema)
         row = obs.get
         report = [
             {"audit": name, "n_violations": int(row[name] or 0)}
@@ -107,9 +109,7 @@ class WapTable:
         return staging_id, report
 
     def _staged_df(self, staging_id: str) -> DataFrame:
-        return self.spark.read.parquet(
-            os.path.join(self._staged_root, staging_id)
-        )
+        return read_saved(self.spark, os.path.join(self._staged_root, staging_id))
 
     # -- audit ------------------------------------------------------------------
     def audit(
@@ -238,7 +238,7 @@ class WapTable:
                 raise FileNotFoundError(
                     f"version {version} was reclaimed by vacuum retention"
                 )
-        return self.spark.read.parquet(manifest["path"])
+        return read_saved(self.spark, manifest["path"])
 
     def published_id(self) -> str | None:
         try:

@@ -33,6 +33,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from linqonsteroids_spark.api import (
     AggInfo,
@@ -42,6 +43,7 @@ from linqonsteroids_spark.api import (
     Node,
     PlanInfo,
 )
+from linqonsteroids_spark.catalog import SCHEMA_SIDECAR, read_saved, save_schema
 
 
 # --- canonical forms -------------------------------------------------------
@@ -405,6 +407,7 @@ class IndexRepository:
         return (
             _already_built(path)
             and _read_json(os.path.join(path, _SIDECAR)) == meta
+            and os.path.exists(os.path.join(path, SCHEMA_SIDECAR))
         )
 
     def _scan(self, entry) -> DataFrame:
@@ -412,7 +415,7 @@ class IndexRepository:
         metadata intact → shuffle-free key joins) or parquet path."""
         if getattr(entry, "layout", "hash") == "table":
             return self.spark.table(entry.path)
-        return self.spark.read.parquet(entry.path)
+        return read_saved(self.spark, entry.path)
 
     def _stale_for(self, entry, q: Lifted, q_snapshot: str | None) -> bool:
         """True when substitution must be withheld under the
@@ -516,13 +519,17 @@ class IndexRepository:
             return _read_json(os.path.join(loc, _SIDECAR)) if loc else None
         return _read_json(os.path.join(e.path, _SIDECAR))
 
-    def _reuse_or_build(self, layout: str, path: str, meta: dict, build) -> None:
+    def _reuse_or_build(
+        self, layout: str, path: str, meta: dict, build, schema: StructType
+    ) -> None:
         """The addIndex contract: one-time build, later registrations are
         metadata-only reuse — but ONLY when the on-disk sidecar fingerprint
         matches this registration (definition + source schema). A name
         reused for a different definition, or a source whose schema
         changed since the old build, rebuilds instead of silently
-        installing stale data (round-2 ADVICE, registry.py:42)."""
+        installing stale data (round-2 ADVICE, registry.py:42). A parquet
+        build also records the ``schema`` of the data files it wrote beside
+        the fingerprint, so scans of it need no schema inference."""
         if self._entry_built(layout, path, meta):
             return
         build()
@@ -533,6 +540,7 @@ class IndexRepository:
                 _write_json(os.path.join(loc, _SIDECAR), meta)
         else:
             _write_json(os.path.join(path, _SIDECAR), meta)
+            save_schema(path, schema)
 
     def _install(self, entry: IndexEntry) -> None:
         self._by_table_key[(entry.table, entry.key_col)] = entry
@@ -667,6 +675,7 @@ class IndexRepository:
                 lambda: write_bucketed_table(
                     src.df, tbl, [key_col], n_buckets=self.n_buckets
                 ),
+                src.df.schema,
             )
             entry = IndexEntry(
                 name, table, key_col, tbl, self.n_buckets,
@@ -682,6 +691,7 @@ class IndexRepository:
                     .write.mode("overwrite")
                     .parquet(path)
                 ),
+                src.df.schema,
             )
             entry = IndexEntry(
                 name, table, key_col, path, self.n_buckets, lets=lets,
@@ -728,6 +738,7 @@ class IndexRepository:
             .write.mode("overwrite")
             .partitionBy(key_col)
             .parquet(path),
+            src.df.drop(key_col).schema,
         )
         entry = IndexEntry(
             name, table, key_col, path, 0, layout="dir",
@@ -776,14 +787,11 @@ class IndexRepository:
         aggs += [F.sum(c).alias(f"sum_{c}") for c in sums]
         aggs += [F.min(c).alias(f"min_{c}") for c in mins]
         aggs += [F.max(c).alias(f"max_{c}") for c in maxs]
+        rollup = src.df.groupBy(F.col(key_col)).agg(*aggs)
         self._reuse_or_build(
             "hash", path, meta,
-            lambda: (
-                src.df.groupBy(F.col(key_col))
-                .agg(*aggs)
-                .write.mode("overwrite")
-                .parquet(path)
-            ),
+            lambda: rollup.write.mode("overwrite").parquet(path),
+            rollup.schema,
         )
         entry = AggIndexEntry(
             name, table, key_col, path, sums=sums, mins=mins, maxs=maxs
@@ -798,7 +806,7 @@ class IndexRepository:
         entry = self._agg_mvs.get((table, key_col))
         if entry is None:
             raise KeyError(f"no agg index for ({table}, {key_col})")
-        return self.spark.read.parquet(entry.path)
+        return read_saved(self.spark, entry.path)
 
     def add_join_index(self, name: str, joined: Lifted) -> JoinIndexEntry:
         """Materialize a left-deep equi-join chain of base tables as an MV
@@ -833,6 +841,7 @@ class IndexRepository:
                 .write.mode("overwrite")
                 .parquet(path)
             ),
+            joined.df.schema,
         )
         entry = JoinIndexEntry(name, ji.tables, ji.keys, path, self.n_buckets)
         self._joins[ji.signature] = entry
@@ -851,6 +860,7 @@ class IndexRepository:
                 .partitionBy(e.key_col)
                 .parquet(e.path)
             )
+            save_schema(e.path, df.drop(e.key_col).schema)
             sidecar = os.path.join(e.path, _SIDECAR)
         elif e.layout == "table":
             from linqonsteroids_spark.sources.parquet import write_bucketed_table
@@ -865,6 +875,7 @@ class IndexRepository:
                 .write.mode("overwrite")
                 .parquet(e.path)
             )
+            save_schema(e.path, df.schema)
             sidecar = os.path.join(e.path, _SIDECAR)
         if old_meta is not None and sidecar is not None:
             # the overwrite cleared the sidecar with the data; restore the
@@ -916,7 +927,7 @@ class IndexRepository:
         aggs += [F.min(c).alias(f"min_{c}") for c in entry.mins]
         aggs += [F.max(c).alias(f"max_{c}") for c in entry.maxs]
         delta_rollup = delta.groupBy(F.col(key_col)).agg(*aggs)
-        old_mv = self.spark.read.parquet(entry.path)
+        old_mv = read_saved(self.spark, entry.path)
         merge_aggs = [F.sum("cnt_star").cast("long").alias("cnt_star")]
         merge_aggs += [
             F.sum(f"sum_{c}").alias(f"sum_{c}") for c in entry.sums
@@ -953,9 +964,10 @@ class IndexRepository:
         # the merge reads the MV it replaces: stage then swap
         tmp = f"{entry.path}__refresh_tmp"
         merged.write.mode("overwrite").parquet(tmp)
-        self.spark.read.parquet(tmp).write.mode("overwrite").parquet(
-            entry.path
-        )
+        self.spark.read.schema(merged.schema).parquet(tmp).write.mode(
+            "overwrite"
+        ).parquet(entry.path)
+        save_schema(entry.path, merged.schema)
         import shutil
 
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1080,7 +1092,7 @@ class IndexRepository:
             + [f"min_{c}" for c in ai.mins]
             + [f"max_{c}" for c in ai.maxs]
         )
-        df = self.spark.read.parquet(entry.path).select(*cols)
+        df = read_saved(self.spark, entry.path).select(*cols)
         return Lifted(
             df,
             kind=q.kind,

@@ -123,7 +123,7 @@ class ResultCache:
                 # probe and the touch — fall through to a fresh miss
                 # instead of handing back a dangling read
                 return self.get_or_materialize(df)
-        return self.spark.read.parquet(path), hit
+        return self.spark.read.schema(df.schema).parquet(path), hit
 
     # -- maintenance ------------------------------------------------------------
     def sweep(self, older_than_s: float) -> int:

@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.catalog import load_table, table_schema
 
 #: the changelog operation that deletes its key from the snapshot.
 TOMBSTONE = "error"
@@ -145,24 +145,14 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC)
 # answer). Oracle = the batch snapshot with n_changes doubled (every change
 # was seen twice); the latest change per key is unaffected by duplication.
 def streaming_cdc_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from linqonsteroids_spark.session import scratch_dir
+    from linqonsteroids_spark.queries.scale import _events_twice
     from linqonsteroids_spark.streaming import CdcUpsertMV
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir}/events.parquet"
-    base = scratch_dir(prefix="squopt_cdcmv_")
-    src_dir = f"{base}/src"
-    os.makedirs(src_dir, exist_ok=True)
-    shutil.copy(src, f"{src_dir}/events_a.parquet")
-    shutil.copy(src, f"{src_dir}/events_b.parquet")
-    schema = spark.read.parquet(src).schema
+    base, src_dir = _events_twice(sf_dir, "squopt_cdcmv_")
     mv = CdcUpsertMV(
         spark,
         src_dir,
-        schema,
+        table_schema(spark, sf_dir, "events"),
         key="user_id",
         order=("ts", "event_id"),
         payload=("value",),
@@ -203,24 +193,14 @@ FROM ranked WHERE rn = 1 AND event_type <> '{TOMBSTONE}'
 # must equal the single-pass snapshot (n_changes = count) even though v2
 # has since doubled every count.
 def streaming_cdc_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from linqonsteroids_spark.session import scratch_dir
+    from linqonsteroids_spark.queries.scale import _events_twice
     from linqonsteroids_spark.streaming import VersionedCdcMV
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir}/events.parquet"
-    base = scratch_dir(prefix="squopt_cdcver_")
-    src_dir = f"{base}/src"
-    os.makedirs(src_dir, exist_ok=True)
-    shutil.copy(src, f"{src_dir}/events_a.parquet")
-    shutil.copy(src, f"{src_dir}/events_b.parquet")
-    schema = spark.read.parquet(src).schema
+    base, src_dir = _events_twice(sf_dir, "squopt_cdcver_")
     mv = VersionedCdcMV(
         spark,
         src_dir,
-        schema,
+        table_schema(spark, sf_dir, "events"),
         key="user_id",
         order=("ts", "event_id"),
         payload=("value",),

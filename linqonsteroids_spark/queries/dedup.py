@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.catalog import load_table, read_saved, save_schema
 from linqonsteroids_spark.dedup.embedding import embedding_near_pairs, embedding_oracle_sql
 from linqonsteroids_spark.dedup.minhash import lsh_candidate_pairs, minhash_oracle_sql
 from linqonsteroids_spark.dedup.ngram import jaccard_pairs, jaccard_oracle_sql
@@ -443,13 +443,14 @@ def _lsh_band_index(spark: SparkSession, sf_dir: str, corpus: DataFrame) -> str:
         # overwrite, not error-if-exists: a build that died mid-write
         # leaves the dir present WITHOUT _SUCCESS, and the rebuild must
         # replace it rather than throw path-already-exists forever
+        bands = _banded(minhash_signatures(corpus), "doc_id")
         (
-            _banded(minhash_signatures(corpus), "doc_id")
-            .repartitionByRange(4, "band_key")
+            bands.repartitionByRange(4, "band_key")
             .sortWithinPartitions("band_key")
             .write.mode("overwrite")
             .parquet(idx)
         )
+        save_schema(idx, bands.schema)
     return idx
 
 
@@ -479,7 +480,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(~is_batch)
     batch = docs.filter(is_batch)
 
-    index = spark.read.parquet(_lsh_band_index(spark, sf_dir, corpus))
+    index = read_saved(spark, _lsh_band_index(spark, sf_dir, corpus))
 
     nb = _banded(minhash_signatures(batch), "doc_id").select(
         F.col("doc_id").alias("new_id"), "band", "band_key"
@@ -589,10 +590,9 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             shutil.rmtree(tmp)
 
-        # resolved ONCE, not once per micro-batch: re-calling
-        # read.parquet inside the handler re-lists and re-infers the
-        # index per batch (guide §1.2)
-        idx_df = spark.read.parquet(idx)
+        # resolved ONCE, not once per micro-batch: re-reading inside the
+        # handler re-lists the index per batch (guide §1.2)
+        idx_df = read_saved(spark, idx)
 
         def handle(df, _bid):
             nb = _banded(minhash_signatures(df), "doc_id").select(
@@ -607,7 +607,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("n_index_cands")
                 )
             )
-            (
+            verdicts = (
                 df.select(F.col("doc_id").alias("new_id"))
                 .distinct()
                 .join(hits, "new_id", "left")
@@ -620,12 +620,11 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "is_dup"
                     ),
                 )
-                # one verdict file per batch, not one per shuffle task —
-                # the verdict set is O(|micro-batch|) rows (guide §6)
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(out)
             )
+            # one verdict file per batch, not one per shuffle task —
+            # the verdict set is O(|micro-batch|) rows (guide §6)
+            verdicts.coalesce(1).write.mode("append").parquet(out)
+            save_schema(out, verdicts.schema)
 
         stream = (
             spark.readStream.schema(batch.schema)
@@ -639,7 +638,7 @@ def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
             .awaitTermination()
         )
-        res = spark.read.parquet(out)
+        res = read_saved(spark, out)
         rows = res.collect()  # materialize before the staging dir dies
         return spark.createDataFrame(rows, res.schema)
     finally:

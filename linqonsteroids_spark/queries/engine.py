@@ -394,6 +394,13 @@ def _split_base(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     return base
 
 
+def _read_split(spark: SparkSession, sf_dir: str, *paths: str) -> DataFrame:
+    """Read split-base files with the schema they were written with:
+    the orders table's."""
+    orders = load_table(spark, sf_dir, "orders")
+    return spark.read.schema(orders.schema).parquet(*paths)
+
+
 def _append_rest(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     """Append the held-back third of orders to ``base`` and return its
     CHANGE FEED — the appended files, read back directly. For an
@@ -418,7 +425,7 @@ def _append_rest(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     )
     if not new_files:
         raise RuntimeError("append produced no new files")
-    return spark.read.parquet(*new_files)
+    return _read_split(spark, sf_dir, *new_files)
 
 
 # --- MV freshness SLA (r11): stale MVs fall back, refreshed MVs return ------
@@ -443,14 +450,14 @@ def mv_stale_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def rollup(b):
         return (
-            lift(spark.read.parquet(b), table="orders_sla")
+            lift(_read_split(spark, sf_dir, b), table="orders_sla")
             .index_by(lambda o: o.o_orderpriority)
             .agg_summary(sums=["o_orderkey"], maxs=["o_totalprice"])
         )
 
     repo.add_agg_index(
         "orders_sla_rollup",
-        lift(spark.read.parquet(base), table="orders_sla").index_by(
+        lift(_read_split(spark, sf_dir, base), table="orders_sla").index_by(
             lambda o: o.o_orderpriority
         ),
         sums=["o_orderkey"],
@@ -468,7 +475,7 @@ def mv_stale_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     if any("orders_sla_rollup" in f for f in files2):
         raise RuntimeError("STALE MV served after base append")
     # the fallback path must already be grown-base-correct
-    n_total = spark.read.parquet(base).count()
+    n_total = _read_split(spark, sf_dir, base).count()
     n_fallback = opt2.df.agg(F.sum("cnt_star")).collect()[0][0]
     if n_fallback != n_total:
         raise RuntimeError(
@@ -476,7 +483,7 @@ def mv_stale_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     repo.refresh_agg_index(
-        "orders_sla_rollup", delta, spark.read.parquet(base)
+        "orders_sla_rollup", delta, _read_split(spark, sf_dir, base)
     )
     opt3 = repo.optimize(rollup(base))
     files3 = opt3.df.inputFiles()
@@ -522,7 +529,7 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         repo,
         {
             "orders_ref": lambda: lift(
-                spark.read.parquet(base), table="orders_ref"
+                _read_split(spark, sf_dir, base), table="orders_ref"
             )
         },
         min_count=2,
@@ -530,7 +537,7 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def rollup(**kw):
         return (
-            lift(spark.read.parquet(base), table="orders_ref")
+            lift(_read_split(spark, sf_dir, base), table="orders_ref")
             .index_by(lambda o: o.o_orderpriority)
             .agg_summary(**kw)
         )
@@ -545,7 +552,7 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mismatches — the idempotence contract of _reuse_or_build.
     repo.add_agg_index(
         "adv_agg_orders_ref_o_orderpriority",
-        lift(spark.read.parquet(base), table="orders_ref").index_by(
+        lift(_read_split(spark, sf_dir, base), table="orders_ref").index_by(
             lambda o: o.o_orderpriority
         ),
         sums=("o_orderkey",),
@@ -565,7 +572,7 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     repo.refresh_agg_index(
         "adv_agg_orders_ref_o_orderpriority",
         delta,
-        spark.read.parquet(base),
+        _read_split(spark, sf_dir, base),
     )
     if catalyst_epoch() == epoch_before:
         raise RuntimeError("refresh did not bump the JVM cache epoch")
@@ -1421,7 +1428,8 @@ def pyds_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
         q.stop()
         res = (
-            spark.read.parquet(out)
+            spark.read.schema(stream.schema)
+            .parquet(out)
             .groupBy("tag")
             .agg(
                 F.sum("amount").alias("total_amount"),
@@ -1644,7 +1652,7 @@ def result_cache_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def q():
         return (
-            spark.read.parquet(base)
+            _read_split(spark, sf_dir, base)
             .groupBy("o_orderstatus")
             .agg(
                 F.count("*").cast("bigint").alias("n_orders"),

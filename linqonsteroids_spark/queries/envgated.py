@@ -28,7 +28,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.catalog import load_table, stream_table
 from linqonsteroids_spark.streaming.incremental import has_tws_runtime
 
 
@@ -70,13 +70,7 @@ def stateful_typed_totals_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError(
             "transformWithStateInPandas runtime absent (google.protobuf)"
         )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     totals = stateful_typed_totals(
         stream, key="user_id", value_col="value", type_col="event_type"
     )

@@ -22,8 +22,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.catalog import load_table, read_saved, save_schema
 from linqonsteroids_spark.functions.text import token_count
+
+
+def _each_file(spark: SparkSession, schema, base: str, handler) -> None:
+    """Stream the parquet files staged in ``base/src``, one micro-batch
+    per file, through ``handler`` (checkpointed under ``base/_chk``)."""
+    import os
+
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(os.path.join(base, "src"))
+        .writeStream.foreachBatch(handler)
+        .option("checkpointLocation", os.path.join(base, "_chk"))
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
 
 # --- deterministic per-row uniform hash ------------------------------------
 # hash_frac(seed, id) in [0, 1): first 8 hex digits of md5(seed || id) as a
@@ -940,11 +958,11 @@ def compaction_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = cached_scratch_dir("squopt_compact_", sf_dir)
     frag = os.path.join(base, "frag")
     packed = os.path.join(base, "packed")
+    events = load_table(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(packed, "_SUCCESS")):
-        events = load_table(spark, sf_dir, "events")
         events.repartition(64).write.mode("overwrite").parquet(frag)
         compact_parquet(spark, frag, packed, target_bytes=4 << 20)
-    back = spark.read.parquet(packed)
+    back = spark.read.schema(events.schema).parquet(packed)
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     return (
         back.select("event_type", cents.alias("_c"))
@@ -998,8 +1016,8 @@ def partition_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not f.startswith((".", "_"))
         )
 
+    events = load_table(spark, sf_dir, "events")
     if not os.path.exists(sidecar):
-        events = load_table(spark, sf_dir, "events")
         (
             events.repartition(8)
             .write.mode("overwrite")
@@ -1045,7 +1063,7 @@ def partition_compaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"UNTOUCHED partition {leaf} was modified by selective "
                 f"maintenance: {now} vs {listing}"
             )
-    back = spark.read.parquet(table)
+    back = spark.read.schema(events.drop("event_type").schema).parquet(table)
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     return (
         back.select("event_type", "user_id", cents.alias("_c"))
@@ -2198,7 +2216,7 @@ def mor_cdf_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bigint"
     )
     mv = (
-        spark.read.parquet(table._base)
+        table._read_base()
         .withColumn("cents", cents)
         .groupBy("o_orderpriority")
         .agg(
@@ -2272,7 +2290,7 @@ def quarantine_replay_release(spark: SparkSession, sf_dir: str) -> DataFrame:
         StreamingExpectations(strict, out, quar)(orders, 0)
     rep = replay_quarantine(spark, quar, relaxed, out, replay_id="cap400k")
     return (
-        spark.read.parquet(out)
+        read_saved(spark, out)
         .agg(
             F.count("*").cast("bigint").alias("n_rows"),
             (F.sum(F.col("o_totalprice").cast("decimal(18,2)")) * 100)
@@ -2444,16 +2462,7 @@ def mor_stream_upserts(spark: SparkSession, sf_dir: str) -> DataFrame:
             check_unique=False,  # _one_per_user dedupes by construction
         )
 
-    (
-        spark.readStream.schema(latest.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _each_file(spark, latest.schema, base, handle)
     state = table.read()
     n_state, n_truth = state.count(), latest.count()
     if n_state != n_truth:
@@ -2524,7 +2533,7 @@ def mor_stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_users"),
         )
 
-    mv_holder = [_mv_of(spark.read.parquet(table._base))]
+    mv_holder = [_mv_of(table._read_base())]
 
     src = os.path.join(base, "src")
     os.makedirs(src)
@@ -2556,16 +2565,7 @@ def mor_stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             count_col="n_users",
         ).localCheckpoint(eager=True)  # cut lineage per micro-batch
 
-    (
-        spark.readStream.schema(latest.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _each_file(spark, latest.schema, base, handle)
     return mv_holder[0]
 
 
@@ -2644,20 +2644,11 @@ def streaming_audited_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         quarantine,
     )
-    (
-        spark.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", os.path.join(base, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    clean = spark.read.parquet(out).select(
+    _each_file(spark, rows.schema, base, sink)
+    clean = read_saved(spark, out).select(
         F.lit("").alias("violated"), "value_cents"
     )
-    bad = spark.read.parquet(quarantine).select(
+    bad = read_saved(spark, quarantine).select(
         F.col("_violated").alias("violated"), "value_cents"
     )
     return (
@@ -2765,7 +2756,8 @@ def dynamic_partition_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _listing(root, "click") == before_click:
         raise RuntimeError("backfill did not rotate the target partition")
     return (
-        spark.read.parquet(root)
+        spark.read.schema(table.drop("event_type").schema)
+        .parquet(root)
         .groupBy("event_type")
         .agg(
             F.count("*").cast("bigint").alias("n_events"),
@@ -3135,7 +3127,7 @@ def mor_minmax_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.append_delta(2, delete_keys=dels)
     mv = (
-        spark.read.parquet(table._base)
+        table._read_base()
         .withColumn("cents", cents)
         .groupBy("o_orderpriority")
         .agg(
@@ -3449,16 +3441,7 @@ def mor_stream_txn_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             txn.commit()
 
-    (
-        spark.readStream.schema(with_fp.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", os.path.join(base, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _each_file(spark, with_fp.schema, base, handle)
     # each read() is a base+deltas last-wins merge; materialize once —
     # c feeds the join AND the final aggregate, i the count AND the join
     c = corpus.read().localCheckpoint(eager=True)
@@ -3593,7 +3576,7 @@ def mor_bloom_fingerprint_lookup(
         raise RuntimeError(
             f"fingerprint probe not pushed to the base scan: {pushed}"
         )
-    direct = spark.read.parquet(os.path.join(path, "base")).where(
+    direct = table._read_base().where(
         F.col("fingerprint") == probe_fps[1]
     )
     rows_read = scan_output_rows(direct)
@@ -3829,6 +3812,7 @@ def mor_consumer_feed_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         table.ack_changes("downstream-mv", thr)
         mv.write.mode("overwrite").parquet(mv_path)
+        save_schema(mv_path, mv.schema)
         with open(stats_path, "w") as f:
             json.dump(
                 {
@@ -3840,7 +3824,7 @@ def mor_consumer_feed_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     with open(stats_path) as f:
         st = json.load(f)
     return (
-        spark.read.parquet(mv_path)
+        read_saved(spark, mv_path)
         .withColumn("position", F.lit(st["position"]).cast("int"))
         .withColumn(
             "redeliveries_skipped",

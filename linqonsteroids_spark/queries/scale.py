@@ -16,7 +16,13 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table, normalize_events_ts
+from linqonsteroids_spark.catalog import (
+    load_table,
+    normalize_events_ts,
+    stream_table,
+    table_path,
+    table_schema,
+)
 from linqonsteroids_spark.operators.asof import range_join
 from linqonsteroids_spark.operators.skew import salted_aggregate, salted_join
 from linqonsteroids_spark.similarity.ivf import ivf_topk
@@ -286,16 +292,7 @@ def _run_stream_to_memory(
 
 
 def streaming_hourly_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = f"{sf_dir}/events.parquet"
-    schema = spark.read.parquet(path).schema
-    # the file-stream source wants a directory: stream the sf_dir, glob-
-    # filtered to the events file
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     windows = windowed_aggregate(
         stream,
         ts_col="ts",
@@ -329,13 +326,7 @@ _SESSION_GAP = "2 hours"
 
 
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     sessions = sessionized_counts(stream, ts_col="ts", gap=_SESSION_GAP, key="user_id")
     name = f"mv_sessions_{next(_MV_IDS)}"
     _run_stream_to_memory(spark, sessions, name, "complete")
@@ -376,13 +367,7 @@ FROM grouped GROUP BY user_id, sid
 # the max-n_events row per key is the final cumulative state, which must
 # equal the batch recompute (the oracle).
 def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     totals = stateful_running_totals(stream, key="user_id", value_col="value")
     name = f"mv_totals_{next(_MV_IDS)}"
     _run_stream_to_memory(spark, totals, name, "update")
@@ -409,15 +394,8 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-batch under AvailableNow, so the append-mode sink sees every pair;
 # the oracle is the equivalent batch interval join.
 def streaming_purchase_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-
     # ONE source, self-joined: Spark splits the stream into both join sides.
-    events = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    events = stream_table(spark, sf_dir, "events")
     purchases = events.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
@@ -477,8 +455,9 @@ def streaming_outer_purchase_clicks(spark: SparkSession, sf_dir: str) -> DataFra
     import shutil
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    base = spark.read.parquet(f"{sf_dir}/events.parquet")
+    base = spark.read.schema(table_schema(spark, sf_dir, "events")).parquet(
+        table_path(sf_dir, "events")
+    )
     ts_dtype = dict(base.dtypes)["ts"]
 
     stage = tempfile.mkdtemp(prefix="outer_join_stage_")
@@ -607,14 +586,8 @@ FROM events GROUP BY user_id
 # rows are key-only (which physical duplicate arrives first is scheduler-
 # dependent), then batch-aggregated; the oracle is the batch DISTINCT.
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        normalize_events_ts(
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
+        stream_table(spark, sf_dir, "events")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
@@ -643,6 +616,23 @@ GROUP BY event_type
 """
 
 
+def _events_twice(sf_dir: str, prefix: str) -> tuple[str, str]:
+    """(scratch dir, its ``src`` dir holding the events file twice): two
+    input files make a ``maxFilesPerTrigger=1`` stream run two batches."""
+    import os
+    import shutil
+
+    from linqonsteroids_spark.session import scratch_dir
+
+    base = scratch_dir(prefix=prefix)
+    os.makedirs(f"{base}/src", exist_ok=True)
+    for copy in ("a", "b"):
+        shutil.copy(
+            table_path(sf_dir, "events"), f"{base}/src/events_{copy}.parquet"
+        )
+    return base, f"{base}/src"
+
+
 # --- incremental aggregate MV (externalized-state IVM) ---------------------
 # The events file lands TWICE in a scratch source dir; maxFilesPerTrigger=1
 # forces two micro-batches, so the second refresh MERGES its partial
@@ -650,25 +640,13 @@ GROUP BY event_type
 # keyed map in the MV, not the state store). The oracle is the doubled
 # batch recompute: counts and sums 2x, min/max unchanged.
 def incremental_mv_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from linqonsteroids_spark.session import scratch_dir
     from linqonsteroids_spark.streaming import IncrementalAggMV
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir}/events.parquet"
-    base = scratch_dir(prefix="squopt_imv_")
-    src_dir = f"{base}/src"
-    import os
-
-    os.makedirs(src_dir, exist_ok=True)
-    shutil.copy(src, f"{src_dir}/events_a.parquet")
-    shutil.copy(src, f"{src_dir}/events_b.parquet")
-    schema = spark.read.parquet(src).schema
+    base, src_dir = _events_twice(sf_dir, "squopt_imv_")
     mv = IncrementalAggMV(
         spark,
         src_dir,
-        schema,
+        table_schema(spark, sf_dir, "events"),
         key="event_type",
         aggs={
             "n_events": ("sum", F.count("*")),
@@ -705,24 +683,13 @@ FROM events GROUP BY event_type
 # time travel is exact). The change feed between the snapshots is derived
 # by diffing them, skipping buckets whose manifest file lists are equal.
 def _versioned_mv(spark: SparkSession, sf_dir: str):
-    import os
-    import shutil
-
-    from linqonsteroids_spark.session import scratch_dir
     from linqonsteroids_spark.streaming import VersionedAggMV
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    src = f"{sf_dir}/events.parquet"
-    base = scratch_dir(prefix="squopt_vmv_")
-    src_dir = f"{base}/src"
-    os.makedirs(src_dir, exist_ok=True)
-    shutil.copy(src, f"{src_dir}/events_a.parquet")
-    shutil.copy(src, f"{src_dir}/events_b.parquet")
-    schema = spark.read.parquet(src).schema
+    base, src_dir = _events_twice(sf_dir, "squopt_vmv_")
     mv = VersionedAggMV(
         spark,
         src_dir,
-        schema,
+        table_schema(spark, sf_dir, "events"),
         key="event_type",
         aggs={
             "n_events": ("sum", F.count("*")),
@@ -800,8 +767,7 @@ def streaming_mv_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linqonsteroids_spark.session import scratch_dir
     from linqonsteroids_spark.streaming import StreamingIndex
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     base = scratch_dir(prefix="squopt_smv_")
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -847,8 +813,7 @@ def streaming_trending_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linqonsteroids_spark.session import scratch_dir
     from linqonsteroids_spark.streaming import StreamingIndex
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = table_schema(spark, sf_dir, "events")
     base = scratch_dir(prefix="squopt_trend_")
 
     def transform(stream: DataFrame) -> DataFrame:
@@ -909,13 +874,7 @@ WHERE rnk <= {_TRENDING_K}
 # side stays broadcast-bounded (customer segments here); bigger dims fall
 # back to a shuffled stream-static join, still stateless.
 def streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = stream_table(spark, sf_dir, "events")
     customers = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
     )
@@ -954,37 +913,23 @@ GROUP BY c_mktsegment
 def statestore_reader_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linqonsteroids_spark.session import cached_scratch_dir
 
-    from linqonsteroids_spark.session import conf_guard
-
-    # nanosAsLong is consumed by the EAGER work inside the guard (the
-    # schema read and the availableNow stream run); the returned frame
-    # reads the checkpoint's statestore files, which carry no nanos
-    # timestamps, so restoring before return is safe
-    with conf_guard(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
+    stream = stream_table(spark, sf_dir, "events")
+    cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
+    agg = (
+        stream.select("event_type", cents.alias("_cents"))
+        .groupBy("event_type")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum("_cents").alias("value_cents"),
         )
-        cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
-        agg = (
-            stream.select("event_type", cents.alias("_cents"))
-            .groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.sum("_cents").alias("value_cents"),
-            )
-        )
-        # checkpoint is key-stable per sf_dir: a re-invocation restarts
-        # from the checkpoint, lists no new files, and leaves the state
-        # unchanged (the repository build->reuse contract, double-sweep
-        # verified)
-        chk = f"{cached_scratch_dir('squopt_sstate_', sf_dir)}/chk"
-        name = f"mv_sstate_{next(_MV_IDS)}"
-        _run_stream_to_memory_checkpointed(
-            spark, agg, name, "complete", chk
-        )
+    )
+    # checkpoint is key-stable per sf_dir: a re-invocation restarts
+    # from the checkpoint, lists no new files, and leaves the state
+    # unchanged (the repository build->reuse contract, double-sweep
+    # verified)
+    chk = f"{cached_scratch_dir('squopt_sstate_', sf_dir)}/chk"
+    name = f"mv_sstate_{next(_MV_IDS)}"
+    _run_stream_to_memory_checkpointed(spark, agg, name, "complete", chk)
     # state value struct fields carry the AGG BUFFER names (count/sum),
     # one row per key (a key lives in exactly one shuffle partition)
     return (
@@ -1099,18 +1044,17 @@ def dpp_partition_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_orderpriority")
             .parquet(fact)
         )
+    dim_df = (
+        orders.select("o_orderpriority")
+        .distinct()
+        .withColumn("urgency", F.substring("o_orderpriority", 1, 1).cast("int"))
+    )
     if not os.path.exists(os.path.join(dim, "_SUCCESS")):
-        (
-            orders.select("o_orderpriority")
-            .distinct()
-            .withColumn(
-                "urgency", F.substring("o_orderpriority", 1, 1).cast("int")
-            )
-            .write.mode("overwrite")
-            .parquet(dim)
-        )
-    f = spark.read.parquet(fact)
-    d = spark.read.parquet(dim).filter(F.col("urgency") <= 2)
+        dim_df.write.mode("overwrite").parquet(dim)
+    # a declared schema names the data columns only; the partition column
+    # is appended from the directory names, typed as inference would
+    f = spark.read.schema(orders.drop("o_orderpriority").schema).parquet(fact)
+    d = spark.read.schema(dim_df.schema).parquet(dim).filter(F.col("urgency") <= 2)
     q = (
         f.join(d, "o_orderpriority")
         .groupBy("o_orderpriority")
@@ -1181,7 +1125,7 @@ def bloom_layout_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"bloom filter missing on o_orderkey in staged files: {missing}"
         )
     key = orders.agg(F.min("o_orderkey")).collect()[0][0]
-    staged = spark.read.parquet(layout)
+    staged = spark.read.schema(orders.schema).parquet(layout)
     q = staged.filter(F.col("o_orderkey") == key).select(
         "o_orderkey",
         "o_custkey",
@@ -1252,7 +1196,7 @@ def zorder_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # missing pushdown. The metadata string is fixed at plan creation, so
     # the guard must wrap the DataFrame construction, not just toString.
     with conf_guard(spark, "spark.sql.maxMetadataStringLength", "1000"):
-        staged = spark.read.parquet(layout)
+        staged = spark.read.schema(orders.schema).parquet(layout)
         box = staged.filter(
             F.col("o_custkey").between(F.lit(ck_lo), F.lit(ck_hi))
             & F.col("o_totalprice").between(F.lit(tp_lo), F.lit(tp_hi))

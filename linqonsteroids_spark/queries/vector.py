@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.catalog import load_table, read_saved
 from linqonsteroids_spark.similarity.knn import (
     brute_force_topk,
     lsh_topk,
@@ -659,7 +659,7 @@ def ann_takedown_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             map(tuple, search(read_ivfpq_index(spark, path)).collect())
         )
         cells = compact_ivfpq_index(spark, path)
-        plain = sorted(map(tuple, search(spark.read.parquet(path)).collect()))
+        plain = sorted(map(tuple, search(read_saved(spark, path)).collect()))
         if masked != plain:
             raise RuntimeError(
                 "tombstone-masked search and post-compaction search "
@@ -667,7 +667,7 @@ def ann_takedown_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         with open(marker, "w") as f:
             json.dump({"n_deleted": n, "cells_rewritten": cells}, f)
-    return search(spark.read.parquet(path))
+    return search(read_saved(spark, path))
 
 
 ANN_TAKEDOWN_SQL = f"""
@@ -747,7 +747,7 @@ def ann_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build_ivfpq_index(emb, path, IVF_CENTROIDS)
     out = ivfpq_index_topk(
-        spark.read.parquet(path),
+        read_saved(spark, path),
         _ann_queries(emb),
         None,
         IVF_CENTROIDS,
@@ -1019,7 +1019,7 @@ def streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
 
         out = ivfpq_index_topk(
-            spark.read.parquet(idx),
+            read_saved(spark, idx),
             _ann_queries(emb),
             None,
             IVF_CENTROIDS,

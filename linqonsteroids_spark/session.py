@@ -107,6 +107,9 @@ def get_spark(app_name: str = "linqonsteroids_spark", cpus: int | None = None) -
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark
+        # reads only as a raw long (catalog.normalize_events_ts)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -75,6 +75,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.catalog import read_saved, save_schema, saved_schema
 from linqonsteroids_spark.similarity.ivf import assign_nearest_cell
 from linqonsteroids_spark.similarity.pq import (
     PQ_CODEBOOK,
@@ -280,11 +281,11 @@ def build_ivfpq_index(
     (PartitionFilters — see ivfpq_index_topk). repartition("cell")
     before partitionBy keeps it to one file per cell instead of one per
     (task x cell) — the measured small-files trap."""
-    encode_corpus(
-        corpus, centroids, corpus_id, corpus_vec
-    ).repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
+    coded = encode_corpus(corpus, centroids, corpus_id, corpus_vec)
+    coded.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         path
     )
+    save_schema(path, coded.drop("cell").schema)
 
 
 def append_to_ivfpq_index(
@@ -302,11 +303,11 @@ def append_to_ivfpq_index(
     build(A ∪ B) exactly (pinned in tests). At 100 TB this is the daily
     ingest path: cost is O(new batch), touching at most the cells the
     batch maps to. Deletes are the tombstone/compaction pair below."""
-    encode_corpus(
-        new_vectors, centroids, corpus_id, corpus_vec
-    ).repartition("cell").write.mode("append").partitionBy("cell").parquet(
+    coded = encode_corpus(new_vectors, centroids, corpus_id, corpus_vec)
+    coded.repartition("cell").write.mode("append").partitionBy("cell").parquet(
         path
     )
+    save_schema(path, coded.drop("cell").schema)
 
 
 def delete_from_ivfpq_index(
@@ -343,32 +344,30 @@ def delete_from_ivfpq_index(
         )
     else:
         rows = (
-            spark.read.parquet(path)
+            read_saved(spark, path)
             .where(F.col("neighbor_id").isin(ids))
             .select("neighbor_id", F.col("cell").cast("int"))
         )
     rows = rows.localCheckpoint(eager=True)  # pin before the append
     n = rows.count()
     if n:
-        rows.write.mode("append").parquet(
-            os.path.join(path, "_tombstones")
-        )
+        tomb = os.path.join(path, "_tombstones")
+        rows.write.mode("append").parquet(tomb)
+        save_schema(tomb, rows.schema)
     return n
 
 
 def read_ivfpq_index(spark, path: str) -> DataFrame:
     """The tombstone-aware read of a persisted index: identical to
-    ``spark.read.parquet(path)`` plus one broadcast anti-join against
+    a plain read of ``path`` plus one broadcast anti-join against
     the (small) tombstone set — a taken-down vector can never be
     served, whether or not compaction has run yet."""
-    idx = spark.read.parquet(path)
+    idx = read_saved(spark, path)
     tomb = os.path.join(path, "_tombstones")
     if os.path.isdir(tomb) and any(
         f.endswith(".parquet") for f in os.listdir(tomb)
     ):
-        dead = (
-            spark.read.parquet(tomb).select("neighbor_id").distinct()
-        )
+        dead = read_saved(spark, tomb).select("neighbor_id").distinct()
         idx = idx.join(F.broadcast(dead), "neighbor_id", "left_anti")
     return idx
 
@@ -401,11 +400,11 @@ def compact_ivfpq_index(spark, path: str) -> list[int]:
     )
     if not tomb_files:
         return []
-    dead = spark.read.parquet(*tomb_files)
+    dead = spark.read.schema(saved_schema(tomb)).parquet(*tomb_files)
     cells = sorted(
         r["cell"] for r in dead.select("cell").distinct().collect()
     )  # bounded: <= n_lists values
-    touched = spark.read.parquet(path).where(F.col("cell").isin(cells))
+    touched = read_saved(spark, path).where(F.col("cell").isin(cells))
     survivors = touched.join(
         F.broadcast(dead.select("neighbor_id").distinct()),
         "neighbor_id",

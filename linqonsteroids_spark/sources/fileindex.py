@@ -110,7 +110,8 @@ def write_with_stats(
     for c in stat_cols:
         aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
     rows = (
-        spark.read.parquet(path)
+        spark.read.schema(df.schema)
+        .parquet(path)
         .groupBy(F.col("_metadata.file_name").alias("file"))
         .agg(*aggs)
         .collect()

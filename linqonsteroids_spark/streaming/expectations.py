@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.catalog import read_saved, save_schema
+
 
 def replay_quarantine(
     spark,
@@ -68,7 +70,7 @@ def replay_quarantine(
 
     from pyspark.sql import functions as SF
 
-    q = spark.read.parquet(quarantine_path)
+    q = read_saved(spark, quarantine_path)
     # The quarantine root is batch=<id>-partitioned, so partition
     # discovery ADDS a `batch` column to the root read. It is layout
     # metadata, not table data: strip it (with the quarantine marker
@@ -91,14 +93,14 @@ def replay_quarantine(
     ]
     prior_released = 0
     if prior:
-        released_before = spark.read.parquet(
+        released_before = spark.read.schema(passing.schema).parquet(
             *[os.path.join(out_path, d) for d in prior]
-        ).select(*[c for c in passing.columns])
+        )
         passing = passing.exceptAll(released_before)
         prior_released = released_before.count()
     target = f"{out_path}/batch=replay-{replay_id}"
     passing.write.mode("overwrite").parquet(target)
-    released = spark.read.parquet(target).count()
+    released = spark.read.schema(passing.schema).parquet(target).count()
     return {
         "released": released,
         "retained": q.count() - prior_released - released,
@@ -198,6 +200,7 @@ class StreamingExpectations:
             clean.write.mode("overwrite").parquet(
                 f"{self.out_path}/batch={batch_id}"
             )
+            save_schema(self.out_path, clean.schema)
             bad = marked.where(F.size("_violations") > 0).select(
                 "*",
                 F.array_join(
@@ -209,5 +212,6 @@ class StreamingExpectations:
             bad.write.mode("overwrite").parquet(
                 f"{self.quarantine_path}/batch={batch_id}"
             )
+            save_schema(self.quarantine_path, bad.schema)
         finally:
             marked.unpersist()

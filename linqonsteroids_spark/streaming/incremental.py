@@ -18,6 +18,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from linqonsteroids_spark.catalog import SCHEMA_SIDECAR, read_saved, save_schema, saved_schema
 
 
 def streaming_index_by(
@@ -591,21 +594,24 @@ class IncrementalAggMV:
 
     def _read_mv_or_none(self) -> DataFrame | None:
         """The accumulated MV, or None ONLY when it genuinely doesn't
-        exist yet (first batch). Any other read failure — permissions,
-        transient FS error, corrupt footer — re-raises: treating it as
-        "first batch" would dynamic-overwrite the touched buckets with
-        batch-only data, silently dropping accumulated state (for the CDC
-        subclass that includes tombstones, letting late out-of-order
-        upserts resurrect deleted keys)."""
-        if not os.path.exists(self.mv_path):
-            return None
-        try:
-            return self.spark.read.parquet(self.mv_path)
-        except Exception as e:  # noqa: BLE001 — filtered by error class below
-            cond = str(getattr(e, "getCondition", lambda: "")() or e)
-            if "PATH_NOT_FOUND" in cond or "UNABLE_TO_INFER_SCHEMA" in cond:
-                return None  # dir exists but holds no committed data yet
-            raise
+        exist yet (first batch). The schema record is written before
+        every data write, so MV files without one are from an older
+        layout: merging over them as "first batch" would dynamic-overwrite
+        the touched buckets with batch-only data, silently dropping
+        accumulated state (for the CDC subclass that includes tombstones,
+        letting late out-of-order upserts resurrect deleted keys)."""
+        if os.path.exists(os.path.join(self.mv_path, SCHEMA_SIDECAR)):
+            return read_saved(self.spark, self.mv_path)
+        if os.path.exists(self._meta_path()):
+            raise ValueError(
+                f"MV at {self.mv_path} has no schema record: rebuild it"
+            )
+        return None
+
+    def _read_mv(self, files: list[str], base_path: str) -> DataFrame:
+        """MV files of one generation, read with the recorded schema."""
+        reader = self.spark.read.schema(saved_schema(self.mv_path))
+        return reader.option("basePath", base_path).parquet(*files)
 
     # ---- layout metadata -------------------------------------------------
     # n_buckets IS the MV's physical layout: a merge run with a different
@@ -622,6 +628,12 @@ class IncrementalAggMV:
         os.makedirs(self.mv_path, exist_ok=True)
         with open(self._meta_path(), "w") as f:
             json.dump({"n_buckets": self.n_buckets, "key": self.key}, f)
+
+    def _save_schema(self, merged: DataFrame) -> None:
+        """Record the data schema the next write stores, just before it:
+        reads declare it and get ``mv_bucket`` from the directory names."""
+        os.makedirs(self.mv_path, exist_ok=True)
+        save_schema(self.mv_path, merged.drop("mv_bucket").schema)
 
     def _check_meta(self) -> None:
         try:
@@ -688,6 +700,7 @@ class IncrementalAggMV:
         merged = merged.repartition(F.col("mv_bucket")).localCheckpoint(
             eager=True
         )
+        self._save_schema(merged)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -719,7 +732,7 @@ class IncrementalAggMV:
         if not todo:
             return []
         slice_df = (
-            self.spark.read.parquet(self.mv_path)
+            read_saved(self.spark, self.mv_path)
             .filter(F.col("mv_bucket").isin(todo))
             .repartition(len(todo), F.col("mv_bucket"))
             .localCheckpoint(eager=True)  # materialize before overwriting
@@ -748,7 +761,7 @@ class IncrementalAggMV:
         )
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.mv_path).drop("mv_bucket")
+        return read_saved(self.spark, self.mv_path).drop("mv_bucket")
 
 
 class VersionedAggMV(IncrementalAggMV):
@@ -881,7 +894,7 @@ class VersionedAggMV(IncrementalAggMV):
         ]
         old_files = [f for b in touched for f in prev.get(b, [])]
         if old_files:
-            old = self.spark.read.option("basePath", self.mv_path).parquet(*old_files)
+            old = self._read_mv(old_files, self.mv_path)
             merged = (
                 old.select(partial.columns)
                 .unionByName(partial)
@@ -897,6 +910,7 @@ class VersionedAggMV(IncrementalAggMV):
             merged = partial
         version = (vs[-1] if vs else 0) + 1
         gen_dir = os.path.join(self.mv_path, "data", f"g{version}")
+        self._save_schema(merged)
         (
             # bucket-aligned tasks: writing straight from the agg's shuffle
             # partitions opens one file per (task x touched bucket) per
@@ -928,7 +942,7 @@ class VersionedAggMV(IncrementalAggMV):
             gen = os.path.dirname(os.path.dirname(f))
             by_gen.setdefault(gen, []).append(f)
         parts = [
-            self.spark.read.option("basePath", g).parquet(*fl)
+            self._read_mv(fl, g)
             for g, fl in by_gen.items()
         ]
         out = parts[0]
@@ -937,8 +951,6 @@ class VersionedAggMV(IncrementalAggMV):
         return out.drop("mv_bucket")
 
     def _empty_schema(self):
-        from pyspark.sql.types import StructType
-
         return StructType([])
 
     def _value_columns(self) -> list[str]:
@@ -970,7 +982,7 @@ class VersionedAggMV(IncrementalAggMV):
         for f in files:
             by_gen.setdefault(os.path.dirname(os.path.dirname(f)), []).append(f)
         parts = [
-            self.spark.read.option("basePath", g).parquet(*fl)
+            self._read_mv(fl, g)
             for g, fl in by_gen.items()
         ]
         slice_df = parts[0]
@@ -1009,7 +1021,7 @@ class VersionedAggMV(IncrementalAggMV):
             for f in files:
                 by_gen.setdefault(os.path.dirname(os.path.dirname(f)), []).append(f)
             parts = [
-                self.spark.read.option("basePath", g).parquet(*fl)
+                self._read_mv(fl, g)
                 for g, fl in by_gen.items()
             ]
             out = parts[0]
@@ -1213,6 +1225,7 @@ class CdcUpsertMV(IncrementalAggMV):
         merged = merged.repartition(F.col("mv_bucket")).localCheckpoint(
             eager=True
         )  # bucket-aligned files; materialize before overwrite (see base)
+        self._save_schema(merged)
         (
             merged.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
@@ -1223,7 +1236,7 @@ class CdcUpsertMV(IncrementalAggMV):
     def read(self) -> DataFrame:
         """The current snapshot: tombstoned keys filtered out."""
         return (
-            self.spark.read.parquet(self.mv_path)
+            read_saved(self.spark, self.mv_path)
             .filter(F.col(self.op_col) != self.tombstone)
             .drop("mv_bucket")
         )
@@ -1262,12 +1275,13 @@ class VersionedCdcMV(CdcUpsertMV, VersionedAggMV):
         ]
         old_files = [f for b in touched for f in prev.get(b, [])]
         if old_files:
-            old = self.spark.read.option("basePath", self.mv_path).parquet(*old_files)
+            old = self._read_mv(old_files, self.mv_path)
             merged = self._reduce(old.select(partial.columns).unionByName(partial))
         else:
             merged = partial
         version = (vs[-1] if vs else 0) + 1
         gen_dir = os.path.join(self.mv_path, "data", f"g{version}")
+        self._save_schema(merged)
         (
             # bucket-aligned tasks — one file per touched bucket, not one
             # per (task x bucket); see VersionedAggMV._merge
@@ -1368,6 +1382,7 @@ class StreamingIndex:
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
             out = self.post_transform(batch_df) if self.post_transform else batch_df
             out.write.mode("overwrite").parquet(self.mv_path)
+            save_schema(self.mv_path, out.schema)
 
         key = "spark.sql.shuffle.partitions"
         old = self.spark.conf.get(key)
@@ -1386,4 +1401,4 @@ class StreamingIndex:
             self.spark.conf.set(key, old)
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.mv_path)
+        return read_saved(self.spark, self.mv_path)

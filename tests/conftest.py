@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -37,6 +39,20 @@ def pytest_unconfigure(config):
     if cm is not None:
         config._evidence_lock_cm = None
         cm.__exit__(None, None, None)
+
+
+@contextmanager
+def jobs_started(spark):
+    """Count the Spark jobs the block starts (on this thread): yields a
+    callable returning the count so far."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 @pytest.fixture(scope="session")

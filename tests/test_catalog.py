@@ -11,13 +11,16 @@ or a plain TimestampType — lands on identical session-tz values.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
+import linqonsteroids_spark
 from linqonsteroids_spark.catalog import load_table, normalize_events_ts
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, jobs_started
 
 _WALL = dt.datetime(2024, 3, 1, 12, 34, 56, 789000)
 _MICROS = int(_WALL.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
@@ -109,3 +112,123 @@ def test_observed_metrics_match_direct_aggregates(spark, tmp_path):
 
     with _pytest.raises(ValueError, match="at least one metric"):
         observed(docs, "empty")
+
+
+# --- one read path: every parquet read declares a schema -------------------
+
+_PKG = os.path.dirname(os.path.abspath(linqonsteroids_spark.__file__))
+
+#: parquet reads that infer their schema, by (module, function) — the
+#: catalog's one resolver and reads of data whose schema the package never
+#: recorded
+_INFERRING_READS = {
+    ("catalog.py", "table_schema"): "the catalog resolver: infers each "
+    "table's file schema once per process",
+    ("operators/compact.py", "compact_parquet"): "compacts a directory "
+    "the caller hands in",
+    ("sources/fileindex.py", "read_pruned"): "range-scans a directory "
+    "the caller names; no schema is recorded with it",
+    ("operators/mor.py", "_footer_fields"): "MOR self-heal: data the "
+    "table meta does not describe (older tables, a version whose writer "
+    "died before its meta stamp)",
+}
+
+
+def _chain(node):
+    """Attribute names along a call chain ``a.b(..).c.parquet`` and its
+    root node."""
+    attrs = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            attrs.append(node.attr)
+            node = node.value
+        else:
+            return attrs, node
+
+
+def _parquet_reads(tree):
+    """(function, line, declares_schema) for every ``.parquet(`` read."""
+    out = []
+
+    def visit(fn, scope):
+        assigns: dict[str, list] = {}
+        for n in ast.walk(fn):
+            if isinstance(n, ast.Assign):
+                for t in n.targets:
+                    if isinstance(t, ast.Name):
+                        assigns.setdefault(t.id, []).append(n.value)
+
+        def attrs_of(node, depth=0):
+            attrs, root = _chain(node)
+            if isinstance(root, ast.Name) and depth < 4:
+                for v in assigns.get(root.id, []):
+                    attrs += attrs_of(v, depth + 1)
+            return attrs
+
+        own = list(ast.iter_child_nodes(fn))  # nested defs are own scopes
+        while own:
+            n = own.pop()
+            if isinstance(n, ast.FunctionDef):
+                continue
+            own.extend(ast.iter_child_nodes(n))
+            if not (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+            ):
+                continue
+            attrs = attrs_of(n.func.value)
+            if {"write", "writeStream"} & set(attrs):
+                continue
+            assert {"read", "readStream"} & set(attrs), (
+                f"{scope}:{n.lineno}: cannot tell whether .parquet( reads"
+            )
+            out.append((scope, n.lineno, "schema" in attrs))
+
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef):
+            visit(node, node.name)
+    return out
+
+
+def test_every_parquet_read_declares_a_schema():
+    """Catalog tables are read through the catalog; artifacts the package
+    wrote are read with their writer's schema. Only the allow-listed
+    reads infer one (a Spark job per read), and each must still exist."""
+    inferring = set()
+    for d, _, files in os.walk(_PKG):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(d, f)
+            rel = os.path.relpath(path, _PKG)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for fn, line, declared in _parquet_reads(tree):
+                if not declared:
+                    inferring.add((rel, fn))
+    assert inferring == set(_INFERRING_READS)
+
+
+def test_catalog_schemas_match_inference(spark):
+    """The declared schema of every catalog table equals what inference
+    finds in the file; the streaming source normalizes to the batch one."""
+    from linqonsteroids_spark.catalog import TABLES, stream_table
+
+    for name in TABLES:
+        path = os.path.join(SF_SMOKE, f"{name}.parquet")
+        inferred = spark.read.parquet(path)
+        if name == "events":
+            inferred = normalize_events_ts(inferred)
+        batch = load_table(spark, SF_SMOKE, name)
+        assert batch.schema == inferred.schema, name
+        assert stream_table(spark, SF_SMOKE, name).schema == batch.schema, name
+
+
+def test_second_load_table_starts_no_job(spark):
+    load_table(spark, SF_SMOKE, "lineitem")
+    with jobs_started(spark) as started:
+        load_table(spark, SF_SMOKE, "lineitem")
+    assert started() == 0

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from linqonsteroids_spark.operators.asof import asof_join, range_join
 from linqonsteroids_spark.operators.typefilter import if_instance_of, type_mapping
+from tests.conftest import jobs_started
 
 
 @pytest.fixture(scope="module")
@@ -731,6 +732,20 @@ def test_bloom_semi_reduce_mixed_key_widths(spark):
     reduced_keys = {r.k for r in bloom_semi_reduce(probe, build, "k", "k").collect()}
     true_keys = {r.k for r in build.filter("k < 5000").collect()}
     assert true_keys <= reduced_keys  # no false negatives across widths
+
+
+def test_bloom_semi_reduce_refuses_bool_words(spark, monkeypatch):
+    """A bitmap word must be exactly an int: bool is an int subclass and
+    would be inlined into the SQL array literal as True/False."""
+    import pytest
+
+    from linqonsteroids_spark.operators import bloomjoin
+
+    words = spark.createDataFrame([(0, True)], "word int, bits boolean")
+    monkeypatch.setattr(bloomjoin, "bloom_bitmap", lambda build, key: words)
+    probe = spark.range(10).selectExpr("id AS k")
+    with pytest.raises(TypeError, match="non-int bitmap words"):
+        bloomjoin.bloom_semi_reduce(probe, probe, "k", "k")
 
 
 def test_asof_join_nearest_semantics(spark):
@@ -1978,6 +1993,14 @@ def test_mor_schema_evolution_adds_nullable_columns(spark, tmp_path):
         4, delete_keys=spark.createDataFrame([(5,)], ["k"])
     )
     assert sorted(r["k"] for r in t.read().collect()) == [1, 2, 3]
+    # every read path over the evolved log declares the schema the table
+    # meta recorded: building the frames starts no Spark job
+    with jobs_started(spark) as started:
+        t.read()
+        t.read(as_of_version=1)
+        t.lookup([1, 5])
+        t.changes(0, 4, include_preimages=True)
+    assert started() == 0
     # a type change on an existing column is still refused
     with pytest.raises(ValueError, match="type of existing column"):
         t.append_delta(
