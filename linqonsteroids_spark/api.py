@@ -362,8 +362,7 @@ class PlanInfo:
 class AggInfo:
     """Recorded rollup structure (``Indexed.agg_summary``): the grouped
     count/sum/min/max shape ``IndexRepository.optimize`` can substitute
-    with a registered rollup MV — the Python twin of the JVM rule's
-    Aggregate substitution (ext/src/LinqExtensions.scala)."""
+    with a registered rollup MV."""
 
     table: str
     key_col: str
@@ -835,8 +834,7 @@ class Indexed:
         """TRACKED rollup: ``cnt_star`` plus ``sum_/min_/max_<col>``
         grouped by the index key — the column naming IS the rollup-MV
         contract, so ``IndexRepository.optimize`` can substitute a
-        registered ``add_agg_index`` artifact for the whole aggregation
-        (and the JVM rule does the same transparently for raw scans).
+        registered ``add_agg_index`` artifact for the whole aggregation.
         Structure is recorded only for the rewritable shape: a plain
         column key over an unfiltered base-table scan; anything else
         computes normally and is never substituted."""

@@ -79,9 +79,9 @@ def simhash_signatures(
     """(id, simhash) — ``n_bits``-bit signature as bigint (two's
     complement for the 64-bit tier); tokenless docs drop out."""
     toks = tokens_df(docs, id_col, text_col).distinct()
-    toks = toks.select(F.col(id_col), _hash_col(n_bits).alias("h"))
+    toks = toks.select(F.col(id_col), _hash_col(n_bits).alias("__sh_h"))
     # bit j: majority vote — popcount(tokens with bit set) * 2 >= n_tokens
-    # (zero-fill shift: h is negative in the 64-bit xxhash64 tier).
+    # (zero-fill shift: the hash is negative in the 64-bit xxhash64 tier).
     # Built as TWO parsed SQL expressions instead of ~200 Column calls
     # (r16; the bloom-literal lesson applied to plan construction): the
     # per-bit popcounts ride one array() aggregate and the vote-sum is a
@@ -90,18 +90,21 @@ def simhash_signatures(
     # invocation building and analyzing the 48-column plan. The vote sum
     # adds long terms in the same ascending-j order as before
     # (shiftleft(1L, 63) wraps to the two's-complement sign weight
-    # exactly as _bit_term did); integer arithmetic, bit-identical.
+    # exactly as _bit_term did); integer arithmetic, bit-identical. The
+    # internal columns carry a ``__sh_`` prefix so no caller's ``id_col``
+    # can collide with them.
     bs = ",".join(
-        f"sum((shiftrightunsigned(h, {j}) & 1))" for j in range(n_bits)
+        f"sum((shiftrightunsigned(__sh_h, {j}) & 1))" for j in range(n_bits)
     )
     agg = toks.groupBy(id_col).agg(
-        F.expr("count(*)").alias("n"), F.expr(f"array({bs})").alias("bs")
+        F.expr("count(*)").alias("__sh_n"),
+        F.expr(f"array({bs})").alias("__sh_bs"),
     )
     return agg.select(
         F.col(id_col),
         F.expr(
             f"aggregate(sequence(0, {n_bits - 1}), 0L, (acc, j) -> "
-            "acc + IF(element_at(bs, j + 1) * 2 >= n, "
+            "acc + IF(element_at(__sh_bs, j + 1) * 2 >= __sh_n, "
             "shiftleft(1L, j), 0L))"
         ).alias("simhash"),
     )

@@ -246,7 +246,7 @@ class JoinIndexEntry:
 class AggIndexEntry:
     """A pre-aggregated rollup MV: one row per distinct key, columns
     following the cnt_star / sum_<col> / min_<col> / max_<col> naming
-    convention the JVM rule's substitutedAgg recognizes. MV size is
+    convention ``optimize``'s Aggregate substitution recognizes. MV size is
     n_groups rows, NOT partitioned by key (one directory per group would
     be the small-files trap for high-cardinality keys; the rollup itself
     is already the compression — scanning it whole is the cheap path)."""
@@ -281,59 +281,6 @@ def base_snapshot(df: DataFrame) -> str:
             size = -1
         entries.append(f"{f}:{size}")
     return hashlib.sha256("\n".join(entries).encode()).hexdigest()
-
-
-def jvm_snapshot(df: DataFrame) -> str:
-    """JVM-comparable twin of :func:`base_snapshot` — digest over the
-    SCHEME-FREE absolute paths (``/a/b/part-….parquet:SIZE``, sorted),
-    which is exactly what the Catalyst rule recomputes from a Hadoop
-    listing of the registered base path (``currentDigest`` in
-    ext/src/LinqExtensions.scala). Published through the bridge confs in
-    'on_read_stale' mode, it lets the JVM tier veto a substitution whose
-    base changed since materialization — the r12 closure of the r11
-    verdict's one real gap (the Python tier's ``_stale_for`` had no JVM
-    twin, so an extension-loaded session could serve a stale MV between
-    a base append and the next refresh/epoch bump)."""
-    import hashlib
-    from urllib.parse import urlparse
-
-    entries = []
-    for f in df.inputFiles():
-        p = urlparse(f).path or f
-        try:
-            size = os.path.getsize(p)
-        except OSError:
-            size = -1
-        entries.append(f"{p}:{size}")
-    return hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()
-
-
-def _snapshot_meta(df: DataFrame) -> dict:
-    """Both freshness stamps every MV sidecar carries: the Python tier
-    compares ``base_snapshot``; the JVM rule compares ``jvm_snapshot``."""
-    return {"base_snapshot": base_snapshot(df), "jvm_snapshot": jvm_snapshot(df)}
-
-
-# -- JVM relation-cache epoch ------------------------------------------------
-# The Catalyst rule (ext/src/LinqExtensions.scala) caches each index/MV's
-# analyzed relation — file listing included — for the JVM lifetime.  Every
-# actual materialization in this process bumps this counter; publishing it
-# as spark.linqonsteroids.cacheEpoch makes the rule drop its cache before
-# the next rewrite, so an index rewritten in-session is never served from
-# a stale listing (round-8 ADVICE).  Process-global on purpose: one driver
-# process == one JVM, and ANY repository instance rebuilding ANY path must
-# invalidate (the JVM cache is keyed by path, not by repository).
-_catalyst_epoch = 0
-
-
-def _bump_catalyst_epoch() -> None:
-    global _catalyst_epoch
-    _catalyst_epoch += 1
-
-
-def catalyst_epoch() -> str:
-    """Current epoch value for ``spark.linqonsteroids.cacheEpoch``."""
-    return str(_catalyst_epoch)
 
 
 class IndexRepository:
@@ -533,7 +480,6 @@ class IndexRepository:
         if self._entry_built(layout, path, meta):
             return
         build()
-        _bump_catalyst_epoch()
         if layout == "table":
             loc = self._table_location(path)
             if loc is not None:
@@ -546,98 +492,6 @@ class IndexRepository:
         self._by_table_key[(entry.table, entry.key_col)] = entry
         self._by_name[entry.name] = entry
         self._save_catalog()
-
-    def catalyst_conf(self, base_paths: dict[str, str]) -> str:
-        """Bridge to the JVM Catalyst rule (ext/src/LinqExtensions.scala):
-        render every directory-partitioned index as a
-        ``basePath,keyCol,indexPath`` registry entry for
-        ``spark.linqonsteroids.indexes``, so queries that read the RAW
-        base parquet (bypassing this Python repository entirely — plain
-        spark.read, spark.sql, other processes on the same session) still
-        get the filter→index substitution, now inside the optimizer.
-        ``base_paths`` maps the logical table name each entry was
-        registered under to the physical parquet path scans will carry.
-        Only "dir"-layout entries qualify: the JVM rule relies on
-        directory-level PartitionFilters, which the hash/bucketed
-        layouts don't expose.
-
-        In 'on_read_stale' mode each entry carries a 4th field — the
-        base's ``jvm_snapshot`` digest recorded at materialization — and
-        the Scala rule recomputes the digest from a live listing of the
-        base path, VETOING substitution on mismatch (r12: the JVM twin
-        of ``_stale_for``). An entry whose sidecar predates digest
-        recording publishes ``unprovable``, which never matches: exactly
-        the Python tier's "unprovable freshness counts as stale"."""
-        parts = [
-            f"{base_paths[e.table]},{e.key_col},{e.path}"
-            + self._digest_field(e)
-            for e in self._by_name.values()
-            if e.layout == "dir" and e.table in base_paths
-        ]
-        return ";".join(parts)
-
-    def _digest_field(self, e) -> str:
-        """``,<jvm_snapshot>`` for the bridge-conf entry of ``e`` under
-        the 'on_read_stale' SLA; empty under 'manual' (the JVM rule then
-        runs digest-free, mirroring manual-mode Python semantics)."""
-        if self.refresh_mode != "on_read_stale":
-            return ""
-        meta = self._sidecar_of(e) or {}
-        return "," + meta.get("jvm_snapshot", "unprovable")
-
-    def catalyst_join_conf(self, base_paths: dict[str, str]) -> str:
-        """Join-MV bridge to the JVM rule: render every 2-table join MV
-        as ``leftPath,leftKey,rightPath,rightKey,mvPath`` for
-        ``spark.linqonsteroids.joinindexes`` — a raw inner equi-join of
-        the two base parquet paths on the registered key pair is then
-        replaced, inside Catalyst, by one scan of the pre-joined MV.
-        Longer chains stay Python-side (the JVM rule's v1 scope is the
-        2-table shape)."""
-        parts = []
-        for (tables, keys), e in self._joins.items():
-            if len(tables) != 2 or not all(t in base_paths for t in tables):
-                continue
-            ((lk, rk),) = keys
-            parts.append(
-                f"{base_paths[tables[0]]},{lk},"
-                f"{base_paths[tables[1]]},{rk},{e.path}"
-                + self._digest_field(e)
-            )
-        return ";".join(parts)
-
-    def catalyst_agg_conf(self, base_paths: dict[str, str]) -> str:
-        """Rollup-MV bridge to the JVM rule: render every agg MV as
-        ``basePath,keyCol,aggMvPath`` for
-        ``spark.linqonsteroids.aggindexes`` — an Aggregate grouping the
-        raw base path by the registered key (count(*)/sum/min/max only)
-        is then replaced, inside Catalyst, by one scan of this
-        pre-aggregated table. The MV's column names (cnt_star, sum_*,
-        min_*, max_*) ARE the contract; add_agg_index writes exactly
-        those."""
-        parts = [
-            f"{base_paths[e.table]},{e.key_col},{e.path}"
-            + self._digest_field(e)
-            for e in self._agg_mvs.values()
-            if e.table in base_paths
-        ]
-        return ";".join(parts)
-
-    def install_catalyst_conf(self, base_paths: dict[str, str]) -> None:
-        """Publish this repository to the JVM rule in one shot: all three
-        registry confs plus the cache epoch, so a re-materialized index
-        is never served from the rule's stale relation cache."""
-        self.spark.conf.set(
-            "spark.linqonsteroids.indexes", self.catalyst_conf(base_paths)
-        )
-        self.spark.conf.set(
-            "spark.linqonsteroids.joinindexes",
-            self.catalyst_join_conf(base_paths),
-        )
-        self.spark.conf.set(
-            "spark.linqonsteroids.aggindexes",
-            self.catalyst_agg_conf(base_paths),
-        )
-        self.spark.conf.set("spark.linqonsteroids.cacheEpoch", catalyst_epoch())
 
     # -- registration (entry point C, SURVEY §3) --
     def add_index(self, name: str, indexed: Indexed) -> IndexEntry:
@@ -664,7 +518,7 @@ class IndexRepository:
             "table": table, "key_col": key_col, "n_buckets": self.n_buckets,
             "lets": [list(p) for p in lets],
             "source_schema": src.df.schema.simpleString(),
-            **_snapshot_meta(src.df),
+            "base_snapshot": base_snapshot(src.df),
         }
         if self.table_backed:
             from linqonsteroids_spark.sources.parquet import write_bucketed_table
@@ -722,7 +576,7 @@ class IndexRepository:
             "table": table, "key_col": key_col, "layout": "dir",
             "lets": [list(p) for p in lets],
             "source_schema": src.df.schema.simpleString(),
-            **_snapshot_meta(src.df),
+            "base_snapshot": base_snapshot(src.df),
         }
         self._reuse_or_build(
             "dir", path, meta,
@@ -758,7 +612,7 @@ class IndexRepository:
         """Materialize a single-key rollup of an unfiltered base-table
         scan: one row per distinct key with ``cnt_star`` plus
         ``sum_/min_/max_<col>`` for each requested column — the naming
-        convention the JVM rule's Aggregate substitution matches. The
+        convention ``optimize``'s Aggregate substitution matches. The
         100 TB story is categorical: a grouped rollup over the base
         becomes a read of n_groups pre-aggregated rows, with NO
         aggregation operator in the plan at all."""
@@ -781,7 +635,7 @@ class IndexRepository:
             "table": table, "key_col": key_col, "layout": "agg",
             "sums": list(sums), "mins": list(mins), "maxs": list(maxs),
             "source_schema": src.df.schema.simpleString(),
-            **_snapshot_meta(src.df),
+            "base_snapshot": base_snapshot(src.df),
         }
         aggs = [F.count(F.lit(1)).alias("cnt_star")]
         aggs += [F.sum(c).alias(f"sum_{c}") for c in sums]
@@ -802,7 +656,7 @@ class IndexRepository:
 
     def lookup_agg(self, table: str, key_col: str) -> DataFrame:
         """Scan a registered rollup MV directly (the explicit-lookup
-        twin of the transparent JVM substitution)."""
+        twin of ``optimize``'s Aggregate substitution)."""
         entry = self._agg_mvs.get((table, key_col))
         if entry is None:
             raise KeyError(f"no agg index for ({table}, {key_col})")
@@ -831,7 +685,7 @@ class IndexRepository:
             "tables": list(ji.tables), "keys": [list(k) for k in ji.keys],
             "n_buckets": self.n_buckets,
             "source_schema": joined.df.schema.simpleString(),
-            **_snapshot_meta(joined.df),
+            "base_snapshot": base_snapshot(joined.df),
         }
         self._reuse_or_build(
             "hash", path, meta,
@@ -886,10 +740,9 @@ class IndexRepository:
                 {
                     **old_meta,
                     "source_schema": df.schema.simpleString(),
-                    **_snapshot_meta(df),
+                    "base_snapshot": base_snapshot(df),
                 },
             )
-        _bump_catalyst_epoch()
         # re-sync the catalog to the advanced sidecar — rehydration
         # compares the two, and a mismatch would silently drop the entry
         # in the next process
@@ -910,9 +763,7 @@ class IndexRepository:
         the snapshot fingerprint forces automatically.
 
         ``base`` is the post-append base scan — its file snapshot is
-        recorded so 'on_read_stale' reads see the refreshed MV as fresh.
-        Bumps the JVM cache epoch (the rule must drop its cached
-        relation for the rewritten path)."""
+        recorded so 'on_read_stale' reads see the refreshed MV as fresh."""
         entry = None
         for e in self._agg_mvs.values():
             if e.name == name:
@@ -973,9 +824,8 @@ class IndexRepository:
         shutil.rmtree(tmp, ignore_errors=True)
         _write_json(
             os.path.join(entry.path, _SIDECAR),
-            {**old_meta, **_snapshot_meta(base)},
+            {**old_meta, "base_snapshot": base_snapshot(base)},
         )
-        _bump_catalyst_epoch()
         self._save_catalog()
         return entry
 

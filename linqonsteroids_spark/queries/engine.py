@@ -67,8 +67,7 @@ WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 1000.0
 # serviceable — the hash layout sorts within buckets (row-group min/max
 # skip), the partitioned layout prunes key directories. The gate RAISES
 # unless the optimizer actually rerouted the scan to index files (the
-# indexed_segment_lookup discipline); the JVM twin is pinned in the
-# Catalyst smoke's range-pruned case.
+# indexed_segment_lookup discipline).
 def indexed_range_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     storage = cached_scratch_dir("squopt_idx_", sf_dir)
@@ -510,15 +509,12 @@ FROM orders GROUP BY o_orderpriority
 # two observed rollup shapes and auto-materializes a covering MV; the
 # query substitutes; the base table APPENDS; the change feed (the
 # appended files) drives refresh_agg_index — an O(|delta|+|MV|) merge,
-# the base is never rescanned — which re-stamps the snapshot and BUMPS
-# the JVM cache epoch (raised-unless-bumped); the SAME query then
-# substitutes again and must hash-match an oracle recomputed over the
-# grown base. The JVM-rule twin of this loop is pinned in
-# tools/catalyst_ext_smoke.py (PASS agg-mv-refresh-loop), where the
-# refreshed rollup is read through spark.sql.extensions.
+# the base is never rescanned — which rewrites the MV's part files and
+# re-stamps the snapshot (raised unless the MV files were replaced); the
+# SAME query then substitutes again and must hash-match an oracle
+# recomputed over the grown base.
 def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from linqonsteroids_spark.plans.advisor import WorkloadAdvisor
-    from linqonsteroids_spark.plans.registry import catalyst_epoch
 
     base = _split_base(spark, sf_dir, "squopt_advrefresh_")
     storage = cached_scratch_dir("squopt_advrefresh_store_", sf_dir)
@@ -568,47 +564,11 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("advised rollup substitution did not fire")
 
     delta = _append_rest(spark, sf_dir, base)
-    epoch_before = catalyst_epoch()
     repo.refresh_agg_index(
         "adv_agg_orders_ref_o_orderpriority",
         delta,
         _read_split(spark, sf_dir, base),
     )
-    if catalyst_epoch() == epoch_before:
-        raise RuntimeError("refresh did not bump the JVM cache epoch")
-    # the republished bridge conf must carry the new epoch — what makes
-    # the JVM rule drop its cached relation for the rewritten MV path
-    # (conf-hygiene: snapshot and restore; these keys are inert without
-    # the extension loaded, but the shared driver session stays clean)
-    _bridge_keys = (
-        "spark.linqonsteroids.indexes",
-        "spark.linqonsteroids.joinindexes",
-        "spark.linqonsteroids.aggindexes",
-        "spark.linqonsteroids.cacheEpoch",
-    )
-    _before = {}
-    for _k in _bridge_keys:
-        try:
-            _before[_k] = spark.conf.get(_k)
-        except Exception:
-            _before[_k] = None
-    try:
-        repo.install_catalyst_conf({"orders_ref": base})
-        if (
-            spark.conf.get("spark.linqonsteroids.cacheEpoch")
-            != catalyst_epoch()
-        ):
-            raise RuntimeError(
-                "install_catalyst_conf did not publish the epoch"
-            )
-        if base not in spark.conf.get("spark.linqonsteroids.aggindexes"):
-            raise RuntimeError("agg bridge conf does not carry the base path")
-    finally:
-        for _k, _v in _before.items():
-            if _v is None:
-                spark.conf.unset(_k)
-            else:
-                spark.conf.set(_k, _v)
 
     q2 = rollup(sums=["o_orderkey"], maxs=["o_totalprice"])
     opt2 = repo.optimize(q2)
@@ -617,6 +577,8 @@ def advised_refresh_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "adv_agg_orders_ref_o_orderpriority" in f for f in files2
     ):
         raise RuntimeError("substitution did not survive the refresh")
+    if set(files2) & set(files1):
+        raise RuntimeError("refresh did not rewrite the rollup MV")
     return opt2.df.select(
         "o_orderpriority",
         F.col("cnt_star").alias("n_orders"),
@@ -669,7 +631,7 @@ WHERE event_type = 'purchase' AND value > 50.0
 """
 
 
-# --- IN-list index lookup (r11: the membership leg on both tiers) ----------
+# --- IN-list index lookup (r11: the membership leg of the rewrite) ---------
 # ``col.isin(...)`` is a union of key equalities: on the directory
 # layout it prunes to the UNION of the named key directories — the scan
 # reads exactly two partitions of the index, however large the table.
@@ -678,9 +640,6 @@ WHERE event_type = 'purchase' AND value > 50.0
 # no matcher of its own. Shares the type-index artifact (same storage
 # key), so the MV builds once per sf_dir and both gates probe it.
 # RAISES unless the rewrite fired AND the IN reached PartitionFilters.
-# The JVM tier admits the same shape natively (In/InSet in
-# hasPrunablePredOn, ext/src/LinqExtensions.scala:168-170; pinned by
-# tools/catalyst_ext_smoke.py's in-list-pruned).
 def indexed_in_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     storage = cached_scratch_dir("squopt_tidx_", sf_dir)
@@ -1260,11 +1219,10 @@ GROUP BY doc_id, seg_id
 """
 
 
-# --- aggregate-MV rollup artifact (the transparent-rollup substrate) -------
+# --- aggregate-MV rollup artifact (the rollup-substitution substrate) ------
 # add_agg_index materializes the single-key rollup (cnt_star / sum_ /
-# min_ / max_ naming — the contract the JVM rule's Aggregate
-# substitution matches; tools/catalyst_ext_smoke.py pins the transparent
-# rewrite in its own JVM). This gate drives the artifact through the
+# min_ / max_ naming — the contract IndexRepository.optimize's Aggregate
+# substitution matches). This gate drives the artifact through the
 # repository: RAISES unless the lookup scans the rollup files, then
 # checks the pre-aggregated contents against the oracle RECOMPUTING the
 # aggregation from the base table — MV semantics, not scan plumbing.

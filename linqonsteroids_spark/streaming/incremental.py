@@ -411,7 +411,17 @@ def apply_cdf_to_minmax_mv(
     merge on the MV's group keys (null-safe — NULL is a legitimate
     group); one bounded ``collect()`` of the rescan group set; and, only
     when that set is non-empty, one semi-filtered aggregate over
-    ``table`` whose output is |rescan groups| rows."""
+    ``table`` whose output is |rescan groups| rows.
+
+    Cluster caveat: the merged MV is EAGERLY localCheckpointed on every
+    call (it feeds both the rescan collect and the returned frame, and
+    would otherwise execute twice). That pins O(|MV|) rows — not just the
+    touched groups — in unreplicated executor-storage blocks, freed only
+    when the returned DataFrame is garbage-collected; many calls in one
+    long-lived session accumulate storage, and on a real cluster an
+    executor loss makes the blocks unrecoverable (no lineage fallback —
+    the maintenance step must be retried from the caller). For a
+    long-lived service, persist the maintained MV to durable storage."""
     import functools
 
     from pyspark.sql import functions as SF
@@ -486,10 +496,12 @@ def apply_cdf_to_minmax_mv(
     # mv⋈broadcast(delta) probe job for the classification and left
     # `merged` lazy, so the MV plan executed twice per call — once under
     # the probe, once under the caller's consumer. One eager checkpoint
-    # halves the MV executions; the collect below reads checkpointed
-    # rows, bounded by the touched groups. (A group whose count reaches
-    # zero is dropped by the filter and never rescanned — recomputing an
-    # empty group's extremum from `table` would find no rows anyway.)
+    # halves the MV executions. The checkpoint holds the whole merged MV
+    # (O(|MV|) rows); only the collect below, which reads just the
+    # rescan set, is bounded by the touched groups. (A group whose count
+    # reaches zero is dropped by the filter and never rescanned —
+    # recomputing an empty group's extremum from `table` would find no
+    # rows anyway.)
     merged = merged.where(SF.col(count_col) > 0).localCheckpoint(eager=True)
     rescan_rows = (
         merged.where(SF.col("_rescan"))

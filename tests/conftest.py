@@ -55,6 +55,19 @@ def jobs_started(spark):
         sc.setLocalProperty("spark.job.description", None)
 
 
+def part_files(path: str) -> set[str]:
+    """Relative paths of every parquet part file under ``path`` (key
+    directories included). Spark writers mint fresh part-file names, so
+    a build or refresh replaces this set and a metadata-only reuse
+    leaves it identical."""
+    return {
+        os.path.relpath(os.path.join(root, f), path)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.startswith("part-")
+    }
+
+
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")

@@ -61,6 +61,26 @@ def test_simhash_hamming_ladder(docs):
     assert (1, 3) not in pairs
 
 
+@pytest.mark.parametrize("id_col", ["n", "h", "bs"])
+def test_simhash_signatures_id_col_may_shadow_internal_names(docs, id_col):
+    # the signature SQL names its own columns; an id column spelled like
+    # one of them must neither collide nor change a single bit
+    for n_bits in (48, 64):
+        want = {
+            r.doc_id: r.simhash
+            for r in simhash_signatures(docs, n_bits=n_bits).collect()
+        }
+        got = {
+            r[id_col]: r.simhash
+            for r in simhash_signatures(
+                docs.withColumnRenamed("doc_id", id_col),
+                id_col=id_col,
+                n_bits=n_bits,
+            ).collect()
+        }
+        assert got == want
+
+
 def test_simhash_blocked_equals_quadratic(spark):
     """Pigeonhole completeness on random-ish signatures: the multi-block
     blocked search returns EXACTLY the all-pairs Hamming<=3 set."""

@@ -8,13 +8,17 @@ that optimized results equal unoptimized results.
 
 from __future__ import annotations
 
+import os
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.api import lift
 from linqonsteroids_spark.catalog import load_table
 from linqonsteroids_spark.plans import IndexRepository
-from tests.conftest import SF_SMOKE
+from linqonsteroids_spark.session import conf_guard
+from tests.conftest import SF_SMOKE, part_files
 
 
 @pytest.fixture(scope="module")
@@ -214,6 +218,39 @@ def test_partitioned_index_prunes_directories(spark, tmp_path_factory):
     pf = plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0]
     assert "event_type" in pf and "click" in pf
     assert _sorted_rows(opt.df) == _sorted_rows(q.df)
+
+
+def test_partitioned_index_writes_few_files_per_key_directory(
+    spark, tmp_path
+):
+    # the build and the refresh REBALANCE on the key before partitionBy
+    # (AQE coalesces the shuffle): each key directory gets O(1) part
+    # files however many scan tasks or shuffle partitions there are —
+    # without the hint every task writes one file into every directory
+    src_path = str(tmp_path / "src")
+    spark.range(0, 16_000).selectExpr(
+        "id", "id % 4 AS k", "id * 2 AS v"
+    ).repartition(16).write.parquet(src_path)
+    src = spark.read.schema("id long, k long, v long").parquet(src_path)
+    assert len(src.inputFiles()) >= 16
+
+    storage = str(tmp_path / "idx")
+    mv_dir = os.path.join(storage, "by_k")
+
+    def files_per_key():
+        return Counter(os.path.dirname(f) for f in part_files(mv_dir))
+
+    with conf_guard(spark, "spark.sql.shuffle.partitions", "64"):
+        r = IndexRepository(spark, storage)
+        r.add_partitioned_index(
+            "by_k", lift(src, table="t").index_by(lambda t: t.k)
+        )
+        built = files_per_key()
+        r.refresh("by_k", src)
+        refreshed = files_per_key()
+    for counts in (built, refreshed):
+        assert sorted(counts) == [f"k={i}" for i in range(4)]
+        assert max(counts.values()) <= 2, counts
 
 
 # --- unsound-rewrite regressions (semi/anti joins and let must block the
@@ -516,8 +553,6 @@ def test_catalog_persists_registrations_across_repo_instances(spark, tmp_path):
     # the _catalog.json written by add_index must rehydrate a FRESH
     # repository instance: lookup and rewrite work with zero re-adds and
     # zero rebuilds (file mtimes untouched)
-    import os
-
     storage = str(tmp_path / "persist_idx")
     r1 = IndexRepository(spark, storage, n_buckets=4)
     customer = load_table(spark, SF_SMOKE, "customer")
@@ -559,8 +594,6 @@ def test_catalog_persists_registrations_across_repo_instances(spark, tmp_path):
 def test_stale_definition_rebuilds_not_reuses(spark, tmp_path):
     # same name, different definition (projected source) -> fingerprint
     # mismatch -> rebuild, never silently installing the old data
-    import os
-
     storage = str(tmp_path / "stale_idx")
     customer = load_table(spark, SF_SMOKE, "customer")
     r = IndexRepository(spark, storage, n_buckets=4)
@@ -579,50 +612,39 @@ def test_stale_definition_rebuilds_not_reuses(spark, tmp_path):
     assert len(spark.read.parquet(mv_dir).columns) == 2 != n_cols_v1
 
 
-def test_materialization_bumps_catalyst_epoch_and_installs_conf(spark, tmp_path):
-    # The JVM rule's relation cache is invalidated by the cacheEpoch conf
-    # (ext/src/LinqExtensions.scala); the Python side of that contract is
-    # (a) every ACTUAL materialization bumps the process-global epoch,
-    # (b) reuse does not, (c) install_catalyst_conf publishes all three
-    # confs in one shot. The JVM half is pinned in the extension smoke
-    # (PASS cache-epoch-invalidation).
-    from linqonsteroids_spark.plans.registry import catalyst_epoch
-
+def test_materialization_replaces_part_files_and_reuse_keeps_them(
+    spark, tmp_path
+):
+    # the addIndex contract, read off the MV directory: a build or a
+    # refresh writes a new set of part files; a metadata-only
+    # re-registration (same definition, same path) leaves it untouched
     customer = load_table(spark, SF_SMOKE, "customer")
-    before = int(catalyst_epoch())
-    r = IndexRepository(spark, str(tmp_path / "epoch_idx"), n_buckets=4)
+    storage = str(tmp_path / "reuse_idx")
+    mv_dir = os.path.join(storage, "cust_seg_dir")
+    r = IndexRepository(spark, storage, n_buckets=4)
     r.add_partitioned_index(
         "cust_seg_dir",
         lift(customer, table="customer").index_by(lambda c: c.c_mktsegment),
     )
-    after_build = int(catalyst_epoch())
-    assert after_build > before  # build happened -> epoch moved
+    built = part_files(mv_dir)
+    assert built
 
-    # metadata-only reuse (same definition, same path): no bump
-    r2 = IndexRepository(spark, str(tmp_path / "epoch_idx"), n_buckets=4)
+    r2 = IndexRepository(spark, storage, n_buckets=4)
     r2.add_partitioned_index(
         "cust_seg_dir",
         lift(customer, table="customer").index_by(lambda c: c.c_mktsegment),
     )
-    assert int(catalyst_epoch()) == after_build
+    assert part_files(mv_dir) == built
 
-    base_path = f"{SF_SMOKE}/customer.parquet"
-    r.install_catalyst_conf({"customer": base_path})
-    assert spark.conf.get("spark.linqonsteroids.cacheEpoch") == catalyst_epoch()
-    assert base_path in spark.conf.get("spark.linqonsteroids.indexes")
-    # leave the shared session clean for other tests
-    spark.conf.set("spark.linqonsteroids.indexes", "")
-    spark.conf.set("spark.linqonsteroids.joinindexes", "")
+    r2.refresh("cust_seg_dir", customer)
+    refreshed = part_files(mv_dir)
+    assert refreshed and not refreshed & built
 
 
 def test_agg_index_build_reuse_and_rebuild(spark, tmp_path):
     # the addIndex contract extended to rollups: identical definition →
-    # metadata-only reuse (no rebuild, no epoch bump); changed aggregate
-    # set → fingerprint mismatch → rebuild with the new columns
-    import os
-
-    from linqonsteroids_spark.plans.registry import catalyst_epoch
-
+    # metadata-only reuse (part files untouched); changed aggregate set →
+    # fingerprint mismatch → rebuild with the new columns
     orders = load_table(spark, SF_SMOKE, "orders")
     r = IndexRepository(spark, str(tmp_path / "aggidx"), n_buckets=4)
     r.add_agg_index(
@@ -638,14 +660,16 @@ def test_agg_index_build_reuse_and_rebuild(spark, tmp_path):
     assert got == want
 
     # identical re-registration: reuse, not rebuild
-    epoch_before = catalyst_epoch()
+    mv_dir = str(tmp_path / "aggidx" / "orders_rollup")
+    built = part_files(mv_dir)
+    assert built
     r2 = IndexRepository(spark, str(tmp_path / "aggidx"), n_buckets=4)
     r2.add_agg_index(
         "orders_rollup",
         lift(orders, table="orders").index_by(lambda o: o.o_orderpriority),
         sums=["o_orderkey"],
     )
-    assert catalyst_epoch() == epoch_before
+    assert part_files(mv_dir) == built
 
     # changed definition at the same name/path: rebuild with new columns
     r2.add_agg_index(
@@ -654,7 +678,7 @@ def test_agg_index_build_reuse_and_rebuild(spark, tmp_path):
         sums=["o_orderkey"],
         maxs=["o_totalprice"],
     )
-    assert catalyst_epoch() != epoch_before
+    assert not part_files(mv_dir) & built
     assert "max_o_totalprice" in r2.lookup_agg("orders", "o_orderpriority").columns
 
     # filtered sources are rejected — the rollup must cover the base

@@ -5,7 +5,7 @@ snapshot against the one recorded at materialization and withholds the
 substitution when they differ — stale aggregates are never served, the
 query computes from the base scan instead. ``refresh_agg_index`` merges
 an append delta into the rollup (O(|delta|+|MV|), mergeable aggregates
-only), re-stamps the snapshot, and bumps the JVM cache epoch.
+only), rewrites the MV's part files and re-stamps the snapshot.
 """
 
 from __future__ import annotations
@@ -19,10 +19,10 @@ from linqonsteroids_spark.api import lift
 from linqonsteroids_spark.plans.registry import (
     IndexRepository,
     base_snapshot,
-    catalyst_epoch,
     match_key_in,
     node_to_column,
 )
+from tests.conftest import part_files
 
 
 def _write_base(spark, path, lo, hi, mode):
@@ -93,13 +93,16 @@ def test_stale_mv_falls_back_then_refresh_restores(spark, base, tmp_path):
     assert got2["g0"] == (220, sum(i * 2 for i in range(1100) if i % 5 == 0), 1095)
 
     # refresh from the delta: substitution returns, values are grown-base
-    epoch_before = catalyst_epoch()
+    mv_dir = str(tmp_path / "store" / "t_rollup")
+    built = part_files(mv_dir)
+    assert built
     repo.refresh_agg_index(
         "t_rollup",
         spark.read.parquet(*delta_files),
         spark.read.parquet(base),
     )
-    assert catalyst_epoch() != epoch_before
+    refreshed = part_files(mv_dir)
+    assert refreshed and not refreshed & built
     opt3 = repo.optimize(_rollup_q(spark, base))
     assert all("t_rollup" in f for f in opt3.df.inputFiles())
     got3 = {r.grp: (r.cnt_star, r.sum_v, r.max_k) for r in opt3.df.collect()}
@@ -265,40 +268,3 @@ def test_isin_set_input_canonicalized(spark):
         ("seg", ("a", "b", "z"))
     ]
     assert q.df.count() == 3
-
-
-def test_jvm_snapshot_and_digest_fields(spark, tmp_path):
-    """r12 JVM veto plumbing: the scheme-free digest is stable across
-    re-reads, changes on append, and reaches the bridge conf as a 4th
-    field ONLY under 'on_read_stale' (manual mode publishes the r11
-    3-field form — digest-free, veto-free)."""
-    from linqonsteroids_spark.api import lift
-    from linqonsteroids_spark.plans.registry import (
-        IndexRepository,
-        jvm_snapshot,
-    )
-
-    base = str(tmp_path / "jbase")
-    spark.range(100).selectExpr("id as k", "id % 4 as seg").write.parquet(base)
-    s1 = jvm_snapshot(spark.read.parquet(base))
-    assert s1 == jvm_snapshot(spark.read.parquet(base))
-    spark.range(100, 120).selectExpr("id as k", "id % 4 as seg").write.mode(
-        "append"
-    ).parquet(base)
-    assert jvm_snapshot(spark.read.parquet(base)) != s1
-
-    for mode, n_commas in (("on_read_stale", 3), ("manual", 2)):
-        repo = IndexRepository(
-            spark, str(tmp_path / f"repo_{mode}"), refresh_mode=mode
-        )
-        repo.add_partitioned_index(
-            f"jidx_{mode}",
-            lift(spark.read.parquet(base), table="jb").index_by(
-                lambda t: t.seg
-            ),
-        )
-        conf = repo.catalyst_conf({"jb": base})
-        assert conf.count(",") == n_commas, (mode, conf)
-        if mode == "on_read_stale":
-            digest = conf.rsplit(",", 1)[1]
-            assert len(digest) == 64 and digest != "unprovable"
