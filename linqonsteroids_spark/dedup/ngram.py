@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.dedup.shingles import shingles_df
+from linqonsteroids_spark.session import materialize
 
 DEFAULT_DF_CAP = 100
 
@@ -28,18 +29,14 @@ def jaccard_pairs(
 ) -> DataFrame:
     """(id_a < id_b, jaccard) for pairs with Jaccard ≥ threshold."""
     # The (doc, shingle) relation feeds several consumers (DF counts +
-    # the cap join; sizes + the pair side), and Catalyst re-executes a
-    # subtree per consumer — the before-plan ran the corpus scan +
-    # shingle explode + distinct EIGHT times for one pair set.
-    # Materialize it once (r15); downstream consumers re-read the
-    # checkpoint, not the parquet. (Measured: checkpointing the capped
-    # relation too is a net loss at sf0.1 — it is nearly as large as the
-    # shingle relation and its recompute from the checkpoint is cheap.)
-    # The DF cap still runs count-only BEFORE any per-shingle
-    # collection, so a stop-shingle never accumulates an unbounded
-    # bucket.
-    sh = shingles_df(docs, id_col, text_col).distinct().localCheckpoint(
-        eager=True
+    # the cap join; sizes + the pair side): the before-plan ran the scan +
+    # explode + distinct EIGHT times for one pair set (r15). Materializing
+    # the capped relation too is a net loss at sf0.1 (nearly as large,
+    # cheap to recompute). The DF cap still runs count-only BEFORE any
+    # per-shingle collection, so a stop-shingle never accumulates an
+    # unbounded bucket.
+    sh = materialize(
+        shingles_df(docs, id_col, text_col).distinct(), "jaccard_pairs: shingles"
     )
     # doc-frequency cap (see module docstring)
     df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))

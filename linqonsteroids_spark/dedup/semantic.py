@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.similarity.knn import cosine_from_norms, dot, l2_norm
+from linqonsteroids_spark.session import materialize
 
 
 def _centroid_scores(vec_col, centroids: list[list[float]]):
@@ -66,10 +67,8 @@ def semantic_dedup_reps(
     # (score + v·v), or the election would favor large-norm members
     # (caught by tests/test_dedup.py::test_semantic_dedup_reps_semantics)
     # materialized once: the assignment (n_centroids x d multiply-adds
-    # per vector, the dominant per-row cost) feeds BOTH the rep election
-    # and the comparison fact side — without the checkpoint it executes
-    # twice per call (r15; same fix as the SimHash signature relation)
-    assigned = (
+    # per vector) feeds BOTH the rep election and the comparison side
+    assigned = materialize(
         emb.select(F.col(id_col), v.alias("v"))
         .withColumn("_s", F.array_min(_centroid_scores(F.col("v"), centroids)))
         .select(
@@ -77,8 +76,8 @@ def semantic_dedup_reps(
             "v",
             F.col("_s.cell").alias("cell"),
             (F.col("_s.score") + dot(F.col("v"), F.col("v"))).alias("cdist"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "semantic_dedup_reps: cell assignment",
     )
     # representative election: lexicographic struct min == ORDER BY cdist
     # ASC, id ASC (ids are unique, so the trailing vector never compares)

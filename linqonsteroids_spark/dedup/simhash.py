@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.dedup.shingles import tokens_df
+from linqonsteroids_spark.session import materialize
 
 N_BITS = 48
 N_BLOCKS = 6
@@ -77,9 +78,15 @@ def simhash_signatures(
     n_bits: int = N_BITS,
 ) -> DataFrame:
     """(id, simhash) — ``n_bits``-bit signature as bigint (two's
-    complement for the 64-bit tier); tokenless docs drop out."""
-    toks = tokens_df(docs, id_col, text_col).distinct()
-    toks = toks.select(F.col(id_col), _hash_col(n_bits).alias("__sh_h"))
+    complement for the 64-bit tier); tokenless docs drop out. ``id_col``
+    may be any name but ``simhash``, the output column."""
+    if id_col == "simhash":
+        raise ValueError("id_col 'simhash' collides with the output column")
+    # the id rides under an internal name: an id_col named ``token``
+    # would collide with the column tokens_df explodes
+    ided = docs.select(F.col(id_col).alias("__sh_id"), text_col)
+    toks = tokens_df(ided, "__sh_id", text_col).distinct()
+    toks = toks.select("__sh_id", _hash_col(n_bits).alias("__sh_h"))
     # bit j: majority vote — popcount(tokens with bit set) * 2 >= n_tokens
     # (zero-fill shift: the hash is negative in the 64-bit xxhash64 tier).
     # Built as TWO parsed SQL expressions instead of ~200 Column calls
@@ -96,12 +103,12 @@ def simhash_signatures(
     bs = ",".join(
         f"sum((shiftrightunsigned(__sh_h, {j}) & 1))" for j in range(n_bits)
     )
-    agg = toks.groupBy(id_col).agg(
+    agg = toks.groupBy("__sh_id").agg(
         F.expr("count(*)").alias("__sh_n"),
         F.expr(f"array({bs})").alias("__sh_bs"),
     )
     return agg.select(
-        F.col(id_col),
+        F.col("__sh_id").alias(id_col),
         F.expr(
             f"aggregate(sequence(0, {n_bits - 1}), 0L, (acc, j) -> "
             "acc + IF(element_at(__sh_bs, j + 1) * 2 >= __sh_n, "
@@ -169,12 +176,9 @@ def simhash_pairs_from_signatures(
     block_bits = n_bits // n_blocks
     k = _combo_size(max_hamming, n_blocks)
     combos = list(combinations(range(n_blocks), k))
-    # the signature relation feeds BOTH join sides; Catalyst re-plans the
-    # subtree per side (the before-plan executed the corpus scan + token
-    # distinct + 64-bit-sum signature aggregate twice, once under the
-    # broadcast). Materialize signatures once — both sides then re-derive
-    # only the cheap block-key explode from the materialized rows (r15).
-    sig = sig.localCheckpoint(eager=True)
+    # the signatures feed BOTH join sides; each side then re-derives only
+    # the cheap block-key explode from the materialized rows (r15)
+    sig = materialize(sig, "simhash_pairs_from_signatures: signatures")
     # canonical combination per touched-block mask: the first combo fully
     # disjoint from the mask (-1 = none; only possible past the
     # completeness bound, where the hamming filter rejects the pair anyway)

@@ -25,14 +25,17 @@ Scale design (100 TB corpus):
   highest count, then lexicographically smallest pair — bounded driver
   traffic: one row), and one Arrow `mapInPandas` stage applying the
   left-to-right non-overlapping merge to each word's symbols.
-- `localCheckpoint` per round truncates lineage (the fixpoint.py pattern);
-  the plan stays O(1) deep regardless of merge count.
+- the initial state is materialized once; each round's merge is one
+  codegen'd string replace chained lazily, so the plan is as deep as
+  the merge count and each argmax job runs the chain over the vocab.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from linqonsteroids_spark.session import materialize
 
 
 def word_frequencies(
@@ -132,8 +135,8 @@ def train_bpe(
     breaks on the lexicographically smallest (left, right)."""
     # split keeps a trailing "" (limit -1 semantics) — drop empties
     chars = F.filter(F.split(F.col("word"), "(?!^)"), lambda t: t != "")
-    state = words.select("word", "freq", chars.alias("syms")).localCheckpoint(
-        eager=True
+    state = materialize(
+        words.select("word", "freq", chars.alias("syms")), "train_bpe: initial state"
     )
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -152,7 +155,7 @@ def train_bpe(
         # the merge is now one codegen'd string replace (r15): chaining k
         # of them lazily costs k cheap vocab-local passes inside the next
         # argmax job, far less than an eager materialization per round —
-        # so no per-round localCheckpoint; the initial state stays the
+        # so no per-round materialize; the initial state stays the
         # only materialization and the plan depth is bounded by n_merges.
         state = _merge_round(state, a, b)
     return merges

@@ -6,10 +6,10 @@ is its flagship instantiation (``FixpointTest.scala:20-22``).
 
 Spark-first design: semi-naive evaluation — each iteration joins only the
 *frontier* (new pairs) against the base edges, unions, dedups, and
-localCheckpoints to truncate lineage (otherwise the plan doubles per
+materializes to truncate lineage (otherwise the plan doubles per
 iteration and the driver OOMs long before the data does). At 100 TB the
-join shuffles edges on dst each round: localCheckpoint materializes the
-RDD but drops its outputPartitioning (measured — a repartition("dst")
+join shuffles edges on dst each round: ``session.materialize`` stores the
+rows but drops its outputPartitioning (measured — a repartition("dst")
 before the checkpoint does not reduce the next round's exchange count),
 so the per-round cost floor is one edge shuffle + one label shuffle.
 Two scale levers applied here:
@@ -34,6 +34,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.session import materialize
+
 _EDGE_TABLE_IDS = itertools.count()
 
 
@@ -44,20 +46,21 @@ def fix(
 ) -> DataFrame:
     """Least-fixpoint of ``acc ∪ step(frontier)`` under set semantics.
 
-    ``step`` receives the frontier (rows added last round) and returns
-    candidate new rows; iteration stops when no new rows appear.
+    ``initial`` must already be distinct and materialized (``materialize``
+    or a persisted table): it seeds both the accumulator and the first
+    frontier. ``step`` receives the frontier (rows added last round) and
+    returns candidate new rows; iteration stops when no new rows appear.
     """
-    # acc is kept as a LAZY union of eagerly-checkpointed frontiers: the
-    # old per-round ``acc.union(frontier).localCheckpoint`` re-copied the
-    # whole accumulated set every round (O(D·|acc|) materialized bytes
-    # over a D-round run); the union of materialized pieces costs the
-    # same one shuffle wherever acc is consumed, with no re-copy (r15).
-    frontier = initial.distinct().localCheckpoint(eager=True)
-    acc = frontier
+    # acc is a LAZY union of materialized frontiers: materializing the
+    # union every round re-copied the whole accumulated set (O(D·|acc|)
+    # bytes over D rounds); the union costs the same one shuffle (r15).
+    frontier = acc = initial
     for _ in range(max_iterations):
         candidates = step(frontier).distinct()
-        frontier = candidates.join(acc, on=list(acc.columns), how="left_anti")
-        frontier = frontier.localCheckpoint(eager=True)
+        frontier = materialize(
+            candidates.join(acc, on=list(acc.columns), how="left_anti"),
+            "fix: frontier",
+        )
         if frontier.isEmpty():
             return acc
         acc = acc.unionByName(frontier)
@@ -71,10 +74,10 @@ def _persist_edges(edges: DataFrame, bucket: bool, key: str = "dst") -> DataFram
     = shuffle partitions, so the scan's HashPartitioning satisfies the
     join's required distribution) and reads it back — every subsequent
     join on ``key`` scans it Exchange-free. ``bucket=False`` keeps the
-    single-process-friendly localCheckpoint, which materializes but drops
+    single-process-friendly ``materialize``, which drops
     outputPartitioning (measured; see module docstring)."""
     if not bucket:
-        return edges.localCheckpoint(eager=True)
+        return materialize(edges, "fixpoint: static edges")
     from linqonsteroids_spark.sources.parquet import write_bucketed_table
 
     spark = edges.sparkSession
@@ -128,11 +131,11 @@ def connected_components(
         .distinct(),
         bucket=bucket_edges,
     )
-    labels = (
+    labels = materialize(
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        "connected_components: initial labels",
     )
     iterations = 0
     for _ in range(max_iterations):
@@ -142,27 +145,25 @@ def connected_components(
         # DIFFERENT keys (label vs node), so Catalyst cannot share the
         # exchange and would execute the neighbor-min join+agg twice per
         # round — materialize it once instead (r15)
-        cand = (
-            labels.join(neigh, labels.node == neigh.src, "left")
-            .select(
+        cand = materialize(
+            labels.join(neigh, labels.node == neigh.src, "left").select(
                 "node",
                 F.col("label").alias("__prev"),
                 F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias(
                     "label"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "connected_components: propagated labels",
         )
         # pointer jump: follow the label one hop (label is always a node id
         # in the same component, so the lookup join is total; left+coalesce
         # guards the invariant rather than relying on it)
         ptr = cand.select(F.col("node").alias("p_node"), F.col("label").alias("p_label"))
-        new_labels = (
-            cand.join(ptr, cand.label == ptr.p_node, "left")
-            .select(
+        new_labels = materialize(
+            cand.join(ptr, cand.label == ptr.p_node, "left").select(
                 "node", "__prev", F.coalesce("p_label", "label").alias("label")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "connected_components: jumped labels",
         )
         # labels are monotone non-increasing, so carrying last round's
         # label through the round turns the convergence check into one
@@ -220,7 +221,7 @@ def transitive_closure(
     driver-loop strategies handle cyclic graphs (their per-round
     left-anti dedup IS the distinct-union a cycle needs). Where it
     applies, the engine schedules the whole fixpoint as one query — no
-    per-round driver sync, no localCheckpoint materializations.
+    per-round driver sync, no per-round materializations.
 
     Driver-loop strategies, the classic iteration-count vs
     per-round-cost trade:
@@ -246,8 +247,8 @@ def transitive_closure(
         # view is a logical plan — each level would re-run the upstream
         # scan + distinct shuffle. Materialize the edge relation once so
         # every recursion level scans in-memory rows (r15).
-        edges.select("src", "dst").distinct().localCheckpoint(
-            eager=True
+        materialize(
+            edges.select("src", "dst").distinct(), "transitive_closure: rcte edges"
         ).createOrReplaceTempView(name)
         return spark.sql(
             f"""
@@ -261,31 +262,23 @@ def transitive_closure(
         )
 
     if strategy == "seminaive":
+        # fix() over a static edge side: base is materialized (or a
+        # bucketed table) and distinct, so it seeds fix() as-is
         base = _persist_edges(
             edges.select("src", "dst").distinct(), bucket=bucket_edges, key="src"
         )
-        # lazy union-of-checkpointed-frontiers accumulator (see fix());
-        # base is already materialized by _persist_edges (checkpoint or
-        # bucketed table), so it seeds the accumulator as-is — the old
-        # extra localCheckpoint(acc) re-copied it for nothing
-        frontier = base
-        acc = base
-        for _ in range(max_iterations):
-            new_pairs = (
-                frontier.select(F.col("src").alias("f_src"), F.col("dst").alias("f_dst"))
-                .join(base, F.col("f_dst") == base.src)
-                .select(F.col("f_src").alias("src"), F.col("dst"))
-                .distinct()
-            )
-            frontier = new_pairs.join(
-                acc, on=["src", "dst"], how="left_anti"
-            ).localCheckpoint(eager=True)
-            if frontier.isEmpty():
-                return acc
-            acc = acc.unionByName(frontier)
-        return acc
 
-    acc = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
+        def step(frontier: DataFrame) -> DataFrame:
+            f = frontier.select(F.col("src").alias("f_src"), F.col("dst").alias("f_dst"))
+            return f.join(base, F.col("f_dst") == base.src).select(
+                F.col("f_src").alias("src"), F.col("dst")
+            )
+
+        return fix(base, step, max_iterations)
+
+    acc = materialize(
+        edges.select("src", "dst").distinct(), "transitive_closure: edges"
+    )
     for _ in range(max_iterations):
         a = acc.select(F.col("src").alias("a_src"), F.col("dst").alias("a_dst"))
         b = acc.select(F.col("src").alias("b_src"), F.col("dst").alias("b_dst"))
@@ -294,8 +287,9 @@ def transitive_closure(
             .select(F.col("a_src").alias("src"), F.col("b_dst").alias("dst"))
             .distinct()
         )
-        delta = new_pairs.join(acc, on=["src", "dst"], how="left_anti").localCheckpoint(
-            eager=True
+        delta = materialize(
+            new_pairs.join(acc, on=["src", "dst"], how="left_anti"),
+            "transitive_closure: new pairs",
         )
         if delta.isEmpty():
             return acc

@@ -34,6 +34,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from linqonsteroids_spark.session import materialize
+
 
 def global_rank(
     df: DataFrame,
@@ -94,8 +96,9 @@ def sorted_neighborhood_pairs(
     Candidate count ≤ N * window by construction (linear in N)."""
     # both block sides below re-derive the ranked relation; materialize
     # it once so the scan + rank window executes once, not twice (r15)
-    ranked = global_rank(df, key, id_col, bucket_len=bucket_len).localCheckpoint(
-        eager=True
+    ranked = materialize(
+        global_rank(df, key, id_col, bucket_len=bucket_len),
+        "sorted_neighborhood_pairs: ranked records",
     )
     cols = (id_col, key, *extra_cols)
     blk = (F.col("rn") / window).cast("long")
@@ -198,15 +201,15 @@ def deletion_neighborhood_pairs(
             "y -> struct(x AS a, y AS b)))"
         )
     )
-    cand = (
+    # barrier: materialize the DISTINCT pair set so the verify below
+    # cannot be pushed beneath the dedup — each surviving pair pays
+    # for exactly ONE levenshtein evaluation
+    cand = materialize(
         buckets.where(F.size("ss") > 1)
         .select(F.explode(pair_expr).alias("e"))
         .select("e.a", "e.b")
-        .distinct()
-        # barrier: materialize the DISTINCT pair set so the verify below
-        # cannot be pushed beneath the dedup — each surviving pair pays
-        # for exactly ONE levenshtein evaluation
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "deletion_neighborhood_pairs: candidate pairs",
     )
     # thresholded levenshtein (Spark >= 3.5): the banded kernel computes
     # O((2k+1)·L) cells instead of the full O(L²) matrix and returns -1

@@ -24,11 +24,11 @@ Clause contract (one joined row scope, like the SQL statement):
   MATCHED clause);
 - target-only rows always survive unchanged (MERGE never touches them).
 
-Like the IVM MVs, the merged slice is materialized (localCheckpoint)
-BEFORE overwriting the partitions it was read from, and the bucket
-modulus is persisted beside the data and validated on every merge — a
-merge run with a different modulus would strand stale rows in buckets
-the pruning filter never reads.
+Like the IVM MVs, the merged slice is materialized BEFORE overwriting
+the partitions it was read from, and the bucket modulus is persisted
+beside the data and validated on every merge — a merge run with a
+different modulus would strand stale rows in buckets the pruning filter
+never reads.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import read_saved, save_schema
+from linqonsteroids_spark.session import materialize
 
 
 class BucketedMergeTable:
@@ -100,16 +101,8 @@ class BucketedMergeTable:
     ) -> None:
         """Merge ``source`` into the bucketed table.
 
-        Cluster caveat (r15 ADVICE): the source is EAGERLY
-        localCheckpointed (it feeds both the touched-bucket collect and
-        the merge join, and would otherwise execute twice per merge).
-        localCheckpoint pins unreplicated executor-storage blocks that
-        are only freed when the DataFrame is garbage-collected, so many
-        merges in one long-lived session accumulate storage, and on a
-        real cluster an executor loss makes the checkpointed blocks
-        unrecoverable (no lineage fallback — the merge must be retried
-        from the caller). Acceptable for batch merges; for a long-lived
-        service, persist the source to durable storage instead.
+        The source and the merged slice are each materialized once; see
+        ``session.materialize`` for the cluster caveat of its blocks.
         """
         self._check_meta()
         target = read_saved(self.spark, self.path)
@@ -123,10 +116,11 @@ class BucketedMergeTable:
         # materialized once: the source plan (often an aggregate) feeds
         # BOTH the touched-bucket collect and the merge join below —
         # without the checkpoint it executes twice per merge (r15)
-        src = (
-            source.withColumn("_src_bucket", self._bucket())
-            .withColumn("_s_present", F.lit(1))
-            .localCheckpoint(eager=True)
+        src = materialize(
+            source.withColumn("_src_bucket", self._bucket()).withColumn(
+                "_s_present", F.lit(1)
+            ),
+            "BucketedMergeTable.merge: source",
         )
         # <= n_buckets ints of driver traffic, independent of source size
         touched = [
@@ -156,10 +150,9 @@ class BucketedMergeTable:
         out_cols.append(
             F.coalesce(F.col("mv_bucket"), F.col("_src_bucket")).alias("mv_bucket")
         )
-        merged = (
-            joined.select(*out_cols)
-            .repartition(F.col("mv_bucket"))
-            .localCheckpoint(eager=True)
+        merged = materialize(
+            joined.select(*out_cols).repartition(F.col("mv_bucket")),
+            "BucketedMergeTable.merge: merged slice",
         )
         (
             merged.write.mode("overwrite")

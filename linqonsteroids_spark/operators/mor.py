@@ -78,6 +78,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from linqonsteroids_spark.session import materialize
+
 _OP = "_op"  # 'U' = upsert (full row), 'D' = delete (key only)
 _VER = "_v"
 _META = "_mor_meta.json"
@@ -1286,7 +1288,7 @@ class MorTable:
         Cost shape at 100 TB: membership (plus the target payload the
         conditions need) is ONE column-pruned scan of the table probed
         against the BROADCAST source key set — no shuffle of the table
-        — localCheckpointed at |matched| ≤ |source| rows; the stats are
+        — materialized at |matched| ≤ |source| rows; the stats are
         ONE ``groupBy(_action).count()`` job over the classified source
         (r14's three separate ``.count()`` legs folded away); the write
         is the normal O(|source|) delta append; the base is never
@@ -1417,7 +1419,7 @@ class MorTable:
         if broadcast_source:
             # bounded by |source|; skipped for bulk merges where the
             # matched set would not fit executor storage
-            matched_t = matched_t.localCheckpoint(eager=True)
+            matched_t = materialize(matched_t, "MorTable.merge_into: matched target")
         joined = source.join(bc(matched_t), self.key, "left")
         is_matched = F.coalesce(F.col("_t_exists"), F.lit(False))
 

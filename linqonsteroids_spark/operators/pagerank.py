@@ -22,7 +22,7 @@ Scale design (100 TB graph):
   partitioning satisfies the join requirement), so each round's rank join
   scans the O(E) side Exchange-free and only the (node, rank) relation
   (O(V), far smaller) moves per round — pinned in ``test_plans``. The
-  default localCheckpoint path materializes the edges but loses
+  default ``materialize`` path stores the edges but loses
   outputPartitioning at the SQL layer (Catalyst re-Exchanges per round) —
   fine single-process, wrong at cluster scale; same trade as the
   connected-components edge side.
@@ -30,14 +30,17 @@ Scale design (100 TB graph):
   ``dst`` + one left join back to the node set. Rounds are fixed
   (``n_iterations``), not convergence-polled — no driver-side collect of
   anything but the node count (one scalar, computed once).
-- localCheckpoint per round truncates lineage so the DAG stays O(1) deep
-  per iteration (the fixpoint.py pattern).
+- ``materialize`` every ``checkpoint_every`` rounds truncates lineage so
+  the DAG stays bounded (the fixpoint.py pattern).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from linqonsteroids_spark.operators.fixpoint import _persist_edges
+from linqonsteroids_spark.session import materialize
 
 SCALE = 10**12
 DAMPING_NUM = 85
@@ -72,7 +75,7 @@ def pagerank(
     # the upstream edge pipeline feeds degree counting, the static join
     # side AND the node set — materialize it once instead of re-running
     # it per consumer (r15; same fix as triangles.py)
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, "pagerank: edges")
     # one endpoint aggregate yields the node set AND the out-degrees:
     # each edge contributes (src, 1) and (dst, 0) row-locally, so one
     # grouped pass replaces the union-distinct node pass plus the
@@ -80,7 +83,7 @@ def pagerank(
     # aggregated endpoints instead of two over raw ones (r16). A node
     # has out_deg > 0 iff it occurs as src, so the filtered projection
     # is exactly the old inner-join degree relation.
-    endpoints = (
+    endpoints = materialize(
         edges.select(
             F.explode(
                 F.array(
@@ -90,12 +93,11 @@ def pagerank(
             ).alias("e")
         )
         .groupBy(F.col("e.node").alias("node"))
-        .agg(F.sum("e.is_src").alias("out_deg"))
-        .localCheckpoint()
+        .agg(F.sum("e.is_src").alias("out_deg")),
+        "pagerank: node degrees",
     )
     nodes = endpoints.select("node")
     n = endpoints.count()  # one driver scalar — the only collect in the operator
-    from linqonsteroids_spark.operators.fixpoint import _persist_edges
 
     deg = endpoints.filter(F.col("out_deg") > 0).select(
         F.col("node").alias("src"), "out_deg"
@@ -120,10 +122,11 @@ def pagerank(
                 )
             ).alias("rank"),
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
+        last = i + 1 == n_iterations  # materialized once, below
+        if checkpoint_every and (i + 1) % checkpoint_every == 0 and not last:
+            ranks = materialize(ranks, "pagerank: ranks")
     # final materialization: the un-truncated tail rounds execute as ONE
     # query here; it also keeps the result a computed relation (a bare
     # lazy plan would let a downstream count() prune the rank arithmetic
     # via left-join elimination — the rounds must actually run)
-    return ranks.localCheckpoint()
+    return materialize(ranks, "pagerank: ranks")

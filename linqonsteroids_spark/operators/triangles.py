@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.session import materialize
+
 
 def orient_edges(edges: DataFrame) -> DataFrame:
     """(lo, hi) undirected distinct edges → (src, dst) oriented by
@@ -73,14 +75,12 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     and Catalyst does not reuse a subtree across consumers (the upstream
     pipeline appeared 22x in the plan before materialization — 112
     Exchanges / 44 scans for one count), so edges, the oriented relation
-    and the neighbor arrays are each materialized once with
-    ``localCheckpoint``."""
-    edges = edges.localCheckpoint(eager=True)
-    oriented = orient_edges(edges).localCheckpoint(eager=True)
-    nbrs = (
-        oriented.groupBy("src")
-        .agg(F.array_sort(F.collect_list("dst")).alias("ns"))
-        .localCheckpoint(eager=True)
+    and the neighbor arrays are each materialized once."""
+    edges = materialize(edges, "triangle_count: edges")
+    oriented = materialize(orient_edges(edges), "triangle_count: oriented edges")
+    nbrs = materialize(
+        oriented.groupBy("src").agg(F.array_sort(F.collect_list("dst")).alias("ns")),
+        "triangle_count: out-neighbor arrays",
     )
     per_edge = oriented.join(
         nbrs.select(F.col("src").alias("u_"), F.col("ns").alias("ns_u")),

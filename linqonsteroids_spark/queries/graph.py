@@ -3,8 +3,8 @@
 Reference: ``expressiontree/Fix.scala:4-41`` — naive fixpoint iteration;
 ``FixpointTest.scala:20-22``. Spark has no native recursion (< 4.0 SQL), so
 the operator is an iterative DataFrame loop with per-iteration dedup and
-localCheckpoint to truncate lineage — the GraphFrames pattern. The oracle is
-DuckDB's WITH RECURSIVE.
+``session.materialize`` to truncate lineage — the GraphFrames pattern.
+The oracle is DuckDB's WITH RECURSIVE.
 """
 
 from __future__ import annotations
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import load_table
 from linqonsteroids_spark.operators.fixpoint import transitive_closure
+from linqonsteroids_spark.session import materialize
 
 
 def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -39,7 +40,7 @@ def nation_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # UNION ALL only — it enumerates paths, dedup happens once at the end —
 # while the cyclic nation permutation above must stay on the driver loop
 # (per-round left-anti dedup). One query, no per-round driver sync, no
-# localCheckpoint barriers.
+# materialization barriers.
 def _dag_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     k = F.col("n_nationkey").cast("int")
@@ -96,8 +97,11 @@ def fix_order_contagion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice",
     )
     base = orders.select("o_orderkey", "o_custkey", "ots")
-    seed = orders.filter(F.col("o_totalprice") > _CONTAGION_SEED).select(
-        "o_orderkey", "o_custkey", "ots"
+    seed = materialize(
+        orders.filter(F.col("o_totalprice") > _CONTAGION_SEED)
+        .select("o_orderkey", "o_custkey", "ots")
+        .distinct(),
+        "fix_order_contagion: seed",
     )
 
     def step(frontier: DataFrame) -> DataFrame:

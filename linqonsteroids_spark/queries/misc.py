@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import load_table
+from linqonsteroids_spark.session import materialize
 
 
 # --- product (foldLeft over Numeric, traversableOps.scala:247-248) --------
@@ -1033,21 +1034,17 @@ FROM iv a JOIN iv b
 def basket_brand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part")
-    # One row per order with its sorted distinct brand set: collect_set
-    # folds the old separate distinct() into the same shuffle, and the
-    # relation is materialized ONCE — the old shape re-executed the
-    # lineitem-scan + broadcast-join + distinct subtree for each of its
-    # four consumers (pair self-join a/b sides, per-brand counts, order
-    # total: 8 scans / 10 Exchanges in the before-plan), plus a
-    # sort-merge self-join on l_orderkey. Pairs now expand row-locally
-    # (i<j over the ≤25-brand array — the same C(25,2) bound as the old
-    # a.brand < b.brand join), so the whole query is ONE shuffle on the
-    # order key plus three scans of the tiny materialized relation (r15).
-    ob = (
+    # One row per order with its sorted distinct brand set (collect_set
+    # folds the distinct into the same shuffle), materialized ONCE for its
+    # three consumers (pairs, per-brand counts, order total). Pairs expand
+    # row-locally (i<j over the ≤25-brand array, the C(25,2) bound), so
+    # the query is ONE shuffle on the order key plus three scans of the
+    # tiny materialized relation (r15).
+    ob = materialize(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("p_brand")).alias("brands"))
-        .localCheckpoint(eager=True)
+        .agg(F.array_sort(F.collect_set("p_brand")).alias("brands")),
+        "basket_brand_pairs: order brand sets",
     )
     pair_expr = F.flatten(
         F.expr(

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import load_table, read_saved, save_schema
 from linqonsteroids_spark.functions.text import token_count
+from linqonsteroids_spark.session import materialize
 
 
 def _each_file(spark: SparkSession, schema, base: str, handler) -> None:
@@ -1456,8 +1457,8 @@ def digest_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized once each: v1 feeds the diff + the before-image semi
     # join, v2 feeds two audits + the diff + the after-image semi join —
     # each execution re-scans orders (twice for v2, a two-branch union)
-    v1 = v1.localCheckpoint(eager=True)
-    v2 = v2.localCheckpoint(eager=True)
+    v1 = materialize(v1, "digest_manifest_incremental: v1")
+    v2 = materialize(v2, "digest_manifest_incremental: v2")
     bucket = F.pmod(F.col("o_orderkey"), F.lit(64))
     stale = os.path.join(
         cached_scratch_dir("squopt_digestinc_", sf_dir), "v1_manifest"
@@ -1471,7 +1472,9 @@ def digest_manifest_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the change set, derived by the diff operator itself — materialized
     # once: its full-outer join would otherwise re-execute per broadcast
     # (the removed- and added-key sets below)
-    diff = snapshot_diff(v1, v2, ["o_orderkey"]).localCheckpoint(eager=True)
+    diff = materialize(
+        snapshot_diff(v1, v2, ["o_orderkey"]), "digest_manifest_incremental: diff"
+    )
     removed_or_changed = diff.where(
         F.col("change_type").isin("removed", "changed")
     ).select("o_orderkey")
@@ -1815,7 +1818,7 @@ def mor_manifest_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE base+deltas merge feeds both the audit and the final
     # aggregate — table.read() re-executes the last-wins window per
     # consumer otherwise
-    snap = table.read().localCheckpoint(eager=True)
+    snap = materialize(table.read(), "mor_manifest_reconciliation: snapshot")
     audit = audit_against_manifest(snap, path)
     return (
         snap
@@ -2111,7 +2114,7 @@ FROM final GROUP BY o_orderpriority
 # delete), unmatched insert (or drop), ONE O(|source|) delta append
 # per merge, base never rewritten. Membership costs one column-pruned
 # table scan probed against the broadcast source key set; the matched
-# key set (bounded by |source|) is localCheckpointed so classification
+# key set (bounded by |source|) is materialized so classification
 # never re-scans. The gate stages orders-without-%3 as the base, then
 # (1) a default update+insert merge of the even keys with '~'-tagged
 # priorities — %6 keys are absent from the base, so they exercise the
@@ -2228,16 +2231,16 @@ def mor_cdf_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = table.changes(*win, include_preimages=True).withColumn(
             "cents", cents
         )
+        # window 2 reads window 1's MV once (one merge join side), so
+        # the MV stays a lazy plan: each window's delta is materialized
+        # inside apply_cdf_to_agg_mv, and a copy of the MV adds a job
         mv = apply_cdf_to_agg_mv(
             mv,
             feed,
             ["o_orderpriority"],
             {"price_cents": "cents"},
             count_col="n_orders",
-        # the persisted-MV boundary between maintenance windows (r15;
-        # see mor_minmax_mv_maintenance) — window 2 must merge into
-        # materialized state, not re-execute window 1's plan
-        ).localCheckpoint(eager=True)
+        )
     return mv
 
 
@@ -2557,13 +2560,16 @@ def mor_stream_cdf_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             check_unique=False,  # _one_per_user dedupes by construction
         )
         feed = table.changes(v - 1, v, include_preimages=True)
-        mv_holder[0] = apply_cdf_to_agg_mv(
-            mv_holder[0],
-            feed,
-            ["event_type"],
-            {"sum_cents": "value_cents"},
-            count_col="n_users",
-        ).localCheckpoint(eager=True)  # cut lineage per micro-batch
+        mv_holder[0] = materialize(  # cut lineage per micro-batch
+            apply_cdf_to_agg_mv(
+                mv_holder[0],
+                feed,
+                ["event_type"],
+                {"sum_cents": "value_cents"},
+                count_col="n_users",
+            ),
+            "mor_stream_cdf_mv: MV",
+        )
 
     _each_file(spark, latest.schema, base, handle)
     return mv_holder[0]
@@ -3140,6 +3146,9 @@ def mor_minmax_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed = table.changes(*win, include_preimages=True).withColumn(
             "cents", cents
         )
+        # window 2 reads window 1's MV once (one merge join side; the
+        # rescan probe reads the merge apply_cdf_to_minmax_mv itself
+        # materializes), so the MV stays a lazy plan between windows
         mv = apply_cdf_to_minmax_mv(
             mv,
             feed,
@@ -3151,12 +3160,7 @@ def mor_minmax_mv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cents", cents
             ),
             count_col="n_orders",
-        # materialize the MV state between maintenance windows — in
-        # production the merged MV is PERSISTED after each batch; a
-        # lazy chain makes window 2's merge (which consumes the MV on
-        # both the join and the rescan-classification probe) re-execute
-        # window 1's whole plan per consumer (r15)
-        ).localCheckpoint(eager=True)
+        )
     return mv
 
 
@@ -3356,6 +3360,33 @@ def mor_tagged_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _txn_consistency(corpus, index, keys_alias: str, gate: str) -> DataFrame:
+    """One row: the corpus aggregate, the index and joined counts, and
+    whether all three agree. Each ``read()`` is a base+deltas last-wins
+    merge feeding two of the three jobs (count / join / agg), so each
+    table is materialized once. The counts are bounded driver-side
+    scalars, embedded as literal columns so the result needs no cross
+    join; the differential still validates them against the oracle."""
+    c = materialize(corpus.read(), f"{gate}: corpus")
+    i = materialize(index.read(), f"{gate}: index")
+    n_index = i.count()
+    n_joined = c.join(i, "doc_id", "inner").count()
+    return (
+        c.agg(
+            F.count("*").cast("bigint").alias("n_corpus"),
+            F.sum("doc_id").cast("bigint").alias(keys_alias),
+            F.sum("n_chars").cast("bigint").alias("sum_chars"),
+        )
+        .withColumn("n_index", F.lit(n_index).cast("bigint"))
+        .withColumn("n_joined", F.lit(n_joined).cast("bigint"))
+        .withColumn(
+            "consistent",
+            (F.col("n_corpus") == F.col("n_index"))
+            & (F.col("n_index") == F.col("n_joined")),
+        )
+    )
+
+
 # --- streaming ingest under multi-table transactions (r15) --------------------
 # The ingest pipeline's end-to-end atomicity story: each micro-batch
 # upserts the corpus table AND its fingerprint index inside ONE
@@ -3392,7 +3423,7 @@ def mor_stream_txn_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialized once: the seed feeds BOTH base writes (each would
     # re-scan documents + re-hash), and both staged batches
-    seed = with_fp.where(key % 3 == 0).localCheckpoint(eager=True)
+    seed = materialize(with_fp.where(key % 3 == 0), "mor_stream_txn_ingest: seed")
     corpus.write_base(seed.select(*corpus_cols))
     index.write_base(seed.select("doc_id", "fingerprint"))
 
@@ -3442,25 +3473,8 @@ def mor_stream_txn_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             txn.commit()
 
     _each_file(spark, with_fp.schema, base, handle)
-    # each read() is a base+deltas last-wins merge; materialize once —
-    # c feeds the join AND the final aggregate, i the count AND the join
-    c = corpus.read().localCheckpoint(eager=True)
-    i = index.read().localCheckpoint(eager=True)
-    n_index = i.count()
-    n_joined = c.join(i, "doc_id", "inner").count()
     return (
-        c.agg(
-            F.count("*").cast("bigint").alias("n_corpus"),
-            F.sum("doc_id").cast("bigint").alias("sum_doc_ids"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-        )
-        .withColumn("n_index", F.lit(n_index).cast("bigint"))
-        .withColumn("n_joined", F.lit(n_joined).cast("bigint"))
-        .withColumn(
-            "consistent",
-            (F.col("n_corpus") == F.col("n_index"))
-            & (F.col("n_index") == F.col("n_joined")),
-        )
+        _txn_consistency(corpus, index, "sum_doc_ids", "mor_stream_txn_ingest")
         .withColumn(
             "visible_versions",
             F.lit(len(corpus._existing_versions())).cast("int"),
@@ -3676,30 +3690,8 @@ def mor_txn_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     with open(stats_path) as f:
         st = json.load(f)
-    # each merged snapshot feeds two of the three consistency jobs below
-    # (count / join / agg) — checkpoint once per table so the base+delta
-    # last-wins merge runs once, not twice, per invocation (r15; same
-    # fix as mor_stream_txn_ingest's consistency section)
-    c = corpus.read().localCheckpoint(eager=True)
-    i = index.read().localCheckpoint(eager=True)
-    # bounded driver-side scalars (single-row aggregates), embedded as
-    # literal columns so the one-row result needs no 1x1 cross join —
-    # the differential still validates them against the oracle
-    n_index = i.count()
-    n_joined = c.join(i, "doc_id", "inner").count()
     return (
-        c.agg(
-            F.count("*").cast("bigint").alias("n_corpus"),
-            F.sum("doc_id").cast("bigint").alias("sum_corpus_keys"),
-            F.sum("n_chars").cast("bigint").alias("sum_chars"),
-        )
-        .withColumn("n_index", F.lit(n_index).cast("bigint"))
-        .withColumn("n_joined", F.lit(n_joined).cast("bigint"))
-        .withColumn(
-            "consistent",
-            (F.col("n_corpus") == F.col("n_index"))
-            & (F.col("n_index") == F.col("n_joined")),
-        )
+        _txn_consistency(corpus, index, "sum_corpus_keys", "mor_txn_takedown")
         .withColumn("claimed_versions", F.lit(st["claimed"]).cast("int"))
         .withColumn("visible_versions", F.lit(st["visible"]).cast("int"))
     )
@@ -3790,7 +3782,7 @@ def mor_consumer_feed_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ["o_orderpriority"],
                 {"sum_cents": "price_cents_src"},
                 count_col="n_orders",
-            ).localCheckpoint()
+            )
             applied_through = thr
         table.ack_changes("downstream-mv", applied_through)
         table.append_delta(

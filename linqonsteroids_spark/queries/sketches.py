@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import load_table
 from linqonsteroids_spark.queries.pipeline import _hash_frac, _hash_frac_sql
+from linqonsteroids_spark.session import materialize
 
 KMV_K = 32
 _KMV_SEED = "kmv"
@@ -135,11 +136,12 @@ def kmv_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     # materialized once: three consumers below (merged / direct / exact)
     # would otherwise each re-run the scan + distinct
-    du = (
+    du = materialize(
         events.select("event_type", "user_id")
         .distinct()
-        .withColumn("h", _hash_frac(_KMV_SEED, F.col("user_id")))
-    ).localCheckpoint(eager=True)
+        .withColumn("h", _hash_frac(_KMV_SEED, F.col("user_id"))),
+        "kmv_sketch_union: distinct users",
+    )
     # per-group sketches: k smallest hashes per event_type
     per_group = du.withColumn(
         "rn",

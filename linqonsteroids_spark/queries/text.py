@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from linqonsteroids_spark.catalog import load_table
 from linqonsteroids_spark.functions.text import token_count, tokens
+from linqonsteroids_spark.session import materialize
 
 
 # --- flatMap/explode: token frequencies -----------------------------------
@@ -737,15 +738,14 @@ def unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # relation feeds the freq table AND the scoring join — and the
     # vocab-sized freq table feeds the total AND the broadcast side —
     # so without materialization the scan + tokenize executes 3x
-    exploded = (
+    exploded = materialize(
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
-        .filter(F.col("token") != "")
-        .localCheckpoint(eager=True)
+        .filter(F.col("token") != ""),
+        "unigram_surprisal: tokens",
     )
-    freqs = (
-        exploded.groupBy("token")
-        .agg(F.count("*").alias("freq"))
-        .localCheckpoint(eager=True)
+    freqs = materialize(
+        exploded.groupBy("token").agg(F.count("*").alias("freq")),
+        "unigram_surprisal: token counts",
     )
     # scalar attach: the 1-row total rides a broadcast nested-loop join
     # onto the (broadcast-sized) freq table — bounded by construction and
@@ -807,7 +807,9 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize ONCE: the token relation feeds the bigram fact side, the
     # bigram count table AND the unigram table — without materialization
     # the scan + regexp tokenize executes three times per run (r15)
-    toked = docs.select("doc_id", toks.alias("_toks")).localCheckpoint(eager=True)
+    toked = materialize(
+        docs.select("doc_id", toks.alias("_toks")), "bigram_surprisal: tokens"
+    )
     bg = (
         toked.filter(F.size("_toks") >= 2)
         .select("doc_id", F.explode(bigrams).alias("b"))
@@ -815,9 +817,9 @@ def bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # vocab-sized; materialized so the bigram aggregate runs once, not
     # once per consumer (probe-join broadcast + context-count rollup)
-    bg_counts = (
-        bg.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-        .localCheckpoint(eager=True)
+    bg_counts = materialize(
+        bg.groupBy("w1", "w2").agg(F.count("*").alias("c12")),
+        "bigram_surprisal: bigram counts",
     )
     ctx_counts = bg_counts.groupBy("w1").agg(F.sum("c12").alias("c1"))
     uni = (

@@ -16,7 +16,33 @@ import tempfile
 import uuid
 from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def materialize(df: DataFrame, label: str) -> DataFrame:
+    """Compute ``df`` now; the returned frame reads the stored rows.
+
+    Catalyst re-executes a subtree for each consumer, so materialize a
+    frame with more than one consumer, a loop state whose lineage must be
+    cut each round, or a frame read from files about to be overwritten.
+    A frame with a single consumer gains only an extra job.
+
+    The package's one materialization: an eager local checkpoint whose
+    job is described by ``label`` (the caller's description is restored;
+    the job group is left alone). Its blocks are not released on exit:
+    the returned frame reads them lazily, possibly across calls (a
+    maintained MV), and ContextCleaner frees them once the frame is
+    unreachable. Cluster caveat: the blocks are unreplicated executor
+    storage without lineage fallback, so an executor loss fails the
+    frame's next action and a session holding many frames accumulates
+    storage; persist long-lived state to durable storage instead."""
+    sc = df.sparkSession.sparkContext
+    prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        sc.setLocalProperty("spark.job.description", prior)
 
 
 def scratch_dir(prefix: str = "squopt_") -> str:

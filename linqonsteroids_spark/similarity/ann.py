@@ -84,6 +84,7 @@ from linqonsteroids_spark.similarity.pq import (
     PQ_M,
     pq_encode,
 )
+from linqonsteroids_spark.session import materialize
 
 
 def _query_probe_luts(
@@ -348,7 +349,7 @@ def delete_from_ivfpq_index(
             .where(F.col("neighbor_id").isin(ids))
             .select("neighbor_id", F.col("cell").cast("int"))
         )
-    rows = rows.localCheckpoint(eager=True)  # pin before the append
+    rows = materialize(rows, "delete_from_ivfpq_index: rows")  # pin before the append
     n = rows.count()
     if n:
         tomb = os.path.join(path, "_tombstones")
@@ -405,11 +406,14 @@ def compact_ivfpq_index(spark, path: str) -> list[int]:
         r["cell"] for r in dead.select("cell").distinct().collect()
     )  # bounded: <= n_lists values
     touched = read_saved(spark, path).where(F.col("cell").isin(cells))
-    survivors = touched.join(
-        F.broadcast(dead.select("neighbor_id").distinct()),
-        "neighbor_id",
-        "left_anti",
-    ).localCheckpoint(eager=True)  # materialize BEFORE overwriting inputs
+    survivors = materialize(  # BEFORE overwriting its inputs
+        touched.join(
+            F.broadcast(dead.select("neighbor_id").distinct()),
+            "neighbor_id",
+            "left_anti",
+        ),
+        "compact_ivfpq_index: survivors",
+    )
     alive_cells = {
         r["cell"]
         for r in survivors.select("cell").distinct().collect()
@@ -467,14 +471,13 @@ def ivfpq_index_topk(
     ``refine`` is set (the exact re-rank fetches true vectors)."""
     if refine is not None and corpus is None:
         raise ValueError("refine requires the corpus for the exact re-rank")
-    # one probe-kernel run total: the localCheckpoint materializes the
-    # Arrow stage at the cells collect, and the ADC join below reuses the
-    # checkpointed partitions instead of re-running the kernel (round-8
-    # ADVICE). Driver traffic stays the bounded cell-id set; the LUT
-    # payload never leaves the executors.
-    probes = _query_probe_luts(
-        queries, centroids, n_probe, query_id, query_vec, m_sub=m_sub
-    ).localCheckpoint(eager=False)
+    # one probe-kernel run total: the cells collect and the ADC join below
+    # both read the materialized probes. Driver traffic stays the bounded
+    # cell-id set; the LUT payload never leaves the executors.
+    probes = materialize(
+        _query_probe_luts(queries, centroids, n_probe, query_id, query_vec, m_sub=m_sub),
+        "ivfpq_index_topk: query probes",
+    )
     cells = sorted(
         {c for r in probes.select("probe_cells").collect() for c in r[0]}
     )  # bounded: <= n_lists values

@@ -33,6 +33,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from linqonsteroids_spark.session import materialize
+
 
 def power_iteration_top_component(
     emb: DataFrame,
@@ -43,9 +45,10 @@ def power_iteration_top_component(
     # materialized ONCE: every iteration re-scanned the parquet + cast
     # otherwise (r15); the matrix is the loop's static side, exactly the
     # pagerank/triangles pattern
-    x = emb.select(
-        F.transform(F.col(vec_col), lambda c: c.cast("double")).alias("x")
-    ).localCheckpoint(eager=True)
+    x = materialize(
+        emb.select(F.transform(F.col(vec_col), lambda c: c.cast("double")).alias("x")),
+        "power_iteration: matrix",
+    )
     dim = len(x.first()["x"])
     v = [1.0 / math.sqrt(dim)] * dim
     norm_xv = 0.0

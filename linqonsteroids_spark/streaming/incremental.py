@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from linqonsteroids_spark.catalog import SCHEMA_SIDECAR, read_saved, save_schema, saved_schema
+from linqonsteroids_spark.session import materialize
 
 
 def streaming_index_by(
@@ -318,9 +319,8 @@ def apply_cdf_to_agg_mv(
         "delete", "update_preimage"
     )
     sign = SF.when(is_add, SF.lit(1)).when(is_ret, SF.lit(-1))
-    delta = (
-        changes.groupBy(*group_cols)
-        .agg(
+    delta = materialize(
+        changes.groupBy(*group_cols).agg(
             *[
                 SF.sum(SF.col(src) * sign).alias(f"_d_{out}")
                 for out, src in sum_cols.items()
@@ -329,8 +329,8 @@ def apply_cdf_to_agg_mv(
             SF.count(
                 SF.when(SF.col("_change_type") == "update", 1)
             ).alias("_n_upd"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "apply_cdf_to_agg_mv: delta",
     )
     # refuse the non-preimage protocol LOUDLY: a plain 'update' row
     # carries only the post-image, so its old contribution cannot be
@@ -413,15 +413,10 @@ def apply_cdf_to_minmax_mv(
     when that set is non-empty, one semi-filtered aggregate over
     ``table`` whose output is |rescan groups| rows.
 
-    Cluster caveat: the merged MV is EAGERLY localCheckpointed on every
-    call (it feeds both the rescan collect and the returned frame, and
-    would otherwise execute twice). That pins O(|MV|) rows — not just the
-    touched groups — in unreplicated executor-storage blocks, freed only
-    when the returned DataFrame is garbage-collected; many calls in one
-    long-lived session accumulate storage, and on a real cluster an
-    executor loss makes the blocks unrecoverable (no lineage fallback —
-    the maintenance step must be retried from the caller). For a
-    long-lived service, persist the maintained MV to durable storage."""
+    The merged MV is materialized on every call (it feeds both the
+    rescan collect and the returned frame, and would otherwise execute
+    twice), which holds O(|MV|) rows, not just the touched groups; see
+    ``session.materialize`` for the cluster caveat of those blocks."""
     import functools
 
     from pyspark.sql import functions as SF
@@ -446,10 +441,8 @@ def apply_cdf_to_minmax_mv(
         fn = SF.min if op == "min" else SF.max
         aggs.append(fn(SF.when(is_add, SF.col(src))).alias(f"_add_{out}"))
         aggs.append(fn(SF.when(is_ret, SF.col(src))).alias(f"_ret_{out}"))
-    delta = (
-        changes.groupBy(*group_cols)
-        .agg(*aggs)
-        .localCheckpoint(eager=True)
+    delta = materialize(
+        changes.groupBy(*group_cols).agg(*aggs), "apply_cdf_to_minmax_mv: delta"
     )
     if not delta.where(SF.col("_n_upd") > 0).isEmpty():
         raise ValueError(
@@ -502,7 +495,9 @@ def apply_cdf_to_minmax_mv(
     # reaches zero is dropped by the filter and never rescanned —
     # recomputing an empty group's extremum from `table` would find no
     # rows anyway.)
-    merged = merged.where(SF.col(count_col) > 0).localCheckpoint(eager=True)
+    merged = materialize(
+        merged.where(SF.col(count_col) > 0), "apply_cdf_to_minmax_mv: merged MV"
+    )
     rescan_rows = (
         merged.where(SF.col("_rescan"))
         .select(*group_cols)
@@ -570,8 +565,8 @@ class IncrementalAggMV:
     state-store residency, so key cardinality is bounded by storage, not
     executor memory — the shape that survives billions of keys. On a
     managed cluster the same layout upgrades to a Delta/Iceberg MERGE;
-    the merged slice is materialized (localCheckpoint) before overwriting
-    the partitions it read.
+    the merged slice is materialized before overwriting the partitions it
+    read.
 
     ``aggs``: out_name → (merge_op ∈ {'sum','min','max'}, partial Column);
     counts merge as 'sum'. ``n_buckets`` sizes the refresh granularity:
@@ -672,21 +667,22 @@ class IncrementalAggMV:
 
     def _merge(self, batch_df: DataFrame, batch_id: int) -> None:
         merge_ops = {"sum": F.sum, "min": F.min, "max": F.max}
-        # materialize the batch partial ONCE: both consumers below — the
-        # touched-bucket probe and the merge itself — would otherwise each
-        # re-execute the batch scan + aggregate (foreachBatch plans have no
-        # cross-action reuse), doubling the per-batch source pass
         partial = (
             batch_df.groupBy(self.key)
             .agg(*[v.alias(n) for n, (_, v) in self.aggs.items()])
             .withColumn("mv_bucket", self._bucket())
-        ).localCheckpoint(eager=True)
+        )
         old = self._read_mv_or_none()
         if old is None:
             self._write_meta()
             merged = partial
         else:
             self._check_meta()
+            # materialize the batch partial ONCE: both consumers below —
+            # the touched-bucket probe and the merge itself — would
+            # otherwise each re-execute the batch scan + aggregate
+            # (foreachBatch plans have no cross-action reuse)
+            partial = materialize(partial, "IncrementalAggMV: batch partial")
             # ≤ n_buckets ints — bounded driver traffic at any batch size
             touched = [
                 r.mv_bucket
@@ -703,18 +699,22 @@ class IncrementalAggMV:
                     ]
                 )
             )
-        # materialize BEFORE overwriting the partitions we just read;
-        # dynamic overwrite replaces only the buckets present in `merged`.
         # Repartition by bucket first: writing straight from the agg's 32
         # shuffle partitions opens one file per (task x touched bucket)
         # per refresh — the small-file problem compact() exists to repair,
         # minimized at the source here.
-        merged = merged.repartition(F.col("mv_bucket")).localCheckpoint(
-            eager=True
+        self._overwrite_buckets(
+            merged.repartition(F.col("mv_bucket")), "IncrementalAggMV: merged buckets"
         )
-        self._save_schema(merged)
+
+    def _overwrite_buckets(self, df: DataFrame, label: str) -> None:
+        """Replace the MV buckets present in ``df`` (dynamic partition
+        overwrite; other buckets keep their files), materializing ``df``
+        first: it was read from the buckets it replaces."""
+        df = materialize(df, label)
+        self._save_schema(df)
         (
-            merged.write.mode("overwrite")
+            df.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("mv_bucket")
             .parquet(self.mv_path)
@@ -743,17 +743,11 @@ class IncrementalAggMV:
         todo = sorted(b for b, c in counts.items() if c >= min_files)
         if not todo:
             return []
-        slice_df = (
+        self._overwrite_buckets(
             read_saved(self.spark, self.mv_path)
             .filter(F.col("mv_bucket").isin(todo))
-            .repartition(len(todo), F.col("mv_bucket"))
-            .localCheckpoint(eager=True)  # materialize before overwriting
-        )
-        (
-            slice_df.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("mv_bucket")
-            .parquet(self.mv_path)
+            .repartition(len(todo), F.col("mv_bucket")),
+            "IncrementalAggMV.compact: buckets",
         )
         return todo
 
@@ -889,11 +883,25 @@ class VersionedAggMV(IncrementalAggMV):
         merge_ops = {"sum": F.sum, "min": F.min, "max": F.max}
         # materialized once — reused by the touched probe and the merge
         # (see IncrementalAggMV._merge)
-        partial = (
+        partial = materialize(
             batch_df.groupBy(self.key)
             .agg(*[v.alias(n) for n, (_, v) in self.aggs.items()])
-            .withColumn("mv_bucket", self._bucket())
-        ).localCheckpoint(eager=True)
+            .withColumn("mv_bucket", self._bucket()),
+            "VersionedAggMV: batch partial",
+        )
+        self._commit_generation(
+            partial,
+            lambda rows: rows.groupBy(self.key, "mv_bucket").agg(
+                *[merge_ops[op](F.col(n)).alias(n) for n, (op, _) in self.aggs.items()]
+            ),
+        )
+
+    def _commit_generation(
+        self, partial: DataFrame, combine: Callable[[DataFrame], DataFrame]
+    ) -> None:
+        """Write ``partial``'s touched buckets as the next generation,
+        ``combine``-d with their current rows (old ∪ partial → merged),
+        and commit a manifest pointing those buckets at the new files."""
         vs = self.versions()
         prev = self._read_manifest(vs[-1]) if vs else {}
         if not vs:
@@ -907,17 +915,7 @@ class VersionedAggMV(IncrementalAggMV):
         old_files = [f for b in touched for f in prev.get(b, [])]
         if old_files:
             old = self._read_mv(old_files, self.mv_path)
-            merged = (
-                old.select(partial.columns)
-                .unionByName(partial)
-                .groupBy(self.key, "mv_bucket")
-                .agg(
-                    *[
-                        merge_ops[op](F.col(n)).alias(n)
-                        for n, (op, _) in self.aggs.items()
-                    ]
-                )
-            )
+            merged = combine(old.select(partial.columns).unionByName(partial))
         else:
             merged = partial
         version = (vs[-1] if vs else 0) + 1
@@ -1234,15 +1232,8 @@ class CdcUpsertMV(IncrementalAggMV):
             merged = self._reduce(
                 old.filter(F.col("mv_bucket").isin(touched)).unionByName(partial)
             )
-        merged = merged.repartition(F.col("mv_bucket")).localCheckpoint(
-            eager=True
-        )  # bucket-aligned files; materialize before overwrite (see base)
-        self._save_schema(merged)
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("mv_bucket")
-            .parquet(self.mv_path)
+        self._overwrite_buckets(  # bucket-aligned files (see base)
+            merged.repartition(F.col("mv_bucket")), "CdcUpsertMV: merged buckets"
         )
 
     def read(self) -> DataFrame:
@@ -1275,38 +1266,7 @@ class VersionedCdcMV(CdcUpsertMV, VersionedAggMV):
                 "n_changes", F.lit(1).cast("long")
             )
         )
-        vs = self.versions()
-        prev = self._read_manifest(vs[-1]) if vs else {}
-        if not vs:
-            self._write_meta()
-        else:
-            self._check_meta()
-        touched = [
-            str(r.mv_bucket)
-            for r in partial.select("mv_bucket").distinct().collect()
-        ]
-        old_files = [f for b in touched for f in prev.get(b, [])]
-        if old_files:
-            old = self._read_mv(old_files, self.mv_path)
-            merged = self._reduce(old.select(partial.columns).unionByName(partial))
-        else:
-            merged = partial
-        version = (vs[-1] if vs else 0) + 1
-        gen_dir = os.path.join(self.mv_path, "data", f"g{version}")
-        self._save_schema(merged)
-        (
-            # bucket-aligned tasks — one file per touched bucket, not one
-            # per (task x bucket); see VersionedAggMV._merge
-            merged.repartition(F.col("mv_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("mv_bucket")
-            .parquet(gen_dir)
-        )
-        manifest = dict(prev)
-        new_files = self._list_bucket_files(gen_dir)
-        for b in touched:
-            manifest[b] = new_files.get(b, [])
-        self._commit_manifest(version, manifest)
+        self._commit_generation(partial, self._reduce)
 
     def _value_columns(self) -> list[str]:
         fields = list(dict.fromkeys([*self.order, self.op_col, *self.payload]))

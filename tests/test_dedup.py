@@ -61,7 +61,7 @@ def test_simhash_hamming_ladder(docs):
     assert (1, 3) not in pairs
 
 
-@pytest.mark.parametrize("id_col", ["n", "h", "bs"])
+@pytest.mark.parametrize("id_col", ["n", "h", "bs", "token"])
 def test_simhash_signatures_id_col_may_shadow_internal_names(docs, id_col):
     # the signature SQL names its own columns; an id column spelled like
     # one of them must neither collide nor change a single bit
@@ -79,6 +79,13 @@ def test_simhash_signatures_id_col_may_shadow_internal_names(docs, id_col):
             ).collect()
         }
         assert got == want
+
+
+def test_simhash_signatures_refuses_output_name_as_id_col(docs):
+    with pytest.raises(ValueError, match="simhash"):
+        simhash_signatures(
+            docs.withColumnRenamed("doc_id", "simhash"), id_col="simhash"
+        )
 
 
 def test_simhash_blocked_equals_quadratic(spark):
